@@ -231,10 +231,12 @@ def q_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Nearly every (user, hour) cell is unique at the driver's
     # densities, so map-side partial aggregation cannot collapse and
     # the groupingSets shape shuffles the Expand-doubled rows as
-    # 8-column aggregation states. Instead: one repartition exchange
-    # of the raw 4-column rows keyed by user_id, then each grouping
-    # set as its own aggregation over that exchange — ReuseExchange
-    # shares the shuffle between the two branches, and
+    # 8-column aggregation states. Instead: a repartition of the raw
+    # rows keyed by user_id, then each grouping set as its own
+    # aggregation over it. The two branches prune different columns
+    # (only the fine one keeps event_type), so no exchange is reused:
+    # the plan scans and shuffles the raw rows once PER BRANCH — two
+    # Exchanges, pinned by tests/test_plans.py.
     # hashpartitioning(user_id) satisfies both aggregates' clustered
     # distributions (user_id is in every grouping set), so no further
     # exchange appears. Semantically identical to GROUPING SETS
@@ -476,12 +478,13 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: exact all-pairs Jaccard >= 0.5 (equal iff banding recall
     is 1 at the gate scale — see section comment).
 
-    est_filter=False: the exact verification below applies the same
-    0.5 threshold the signature-estimate prefilter would, so the
-    prefilter can only drop pairs the exact filter drops too — its
-    broadcast-attach stage (two extra jobs re-scanning the cached
-    signatures) bought nothing. Output is identical: candidates grow
-    to the raw banding set, and the exact filter is unchanged."""
+    est_filter=False: no signature-estimate prefilter before the exact
+    verification. The estimate is a different, noisy measure, so the
+    prefilter could drop a pair whose exact Jaccard passes; without it
+    the candidates form a superset (the raw banding set) and the exact
+    filter is unchanged, so the output can only move toward the
+    all-pairs oracle — and the prefilter's broadcast-attach stage (two
+    extra jobs re-scanning the cached signatures) is gone."""
     docs = _documents(spark, sf_dir)
     # persist: the verification stage references the candidate frame
     # twice (semi-join id set + the pair join), and without the cache

@@ -5,7 +5,7 @@ when unflagged, and appends new tokens at the end preserving existing
 order (models.py:180-184; golden "FLAG2" -> "FLAG2 SUSPECT",
 tests/test_models.py:357-358). Byte-identical output matters for the
 tier-equality criterion, so the canonical representation stays a
-string; array helpers exist for set-style queries.
+string.
 """
 
 from __future__ import annotations
@@ -31,13 +31,3 @@ def has_flag(flags: Column, flag: str) -> Column:
     substring test, not a token test."""
     return flags.contains(flag)
 
-
-def flags_to_array(flags: Column) -> Column:
-    """"A B" -> ["A","B"]; "" -> [] (query-side convenience)."""
-    return F.when(flags == "", F.array().cast("array<string>")).otherwise(
-        F.split(flags, " ")
-    )
-
-
-def array_to_flags(arr: Column) -> Column:
-    return F.array_join(arr, " ")

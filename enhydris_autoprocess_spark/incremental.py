@@ -167,21 +167,11 @@ class SnapshotIncrementalRollup:
                 # not the tier
                 touched = partial.select(*_KEYS).dropDuplicates()
                 existing = existing.join(touched, list(_KEYS), "left_semi")
-            merged = _merge_stats(partial, existing).persist()
-            n = merged.count()
-            if n:
-                self.tiers["1min"].append(
-                    merged,
-                    properties={
-                        "source_lo": lo,
-                        "source_hi": hi,
-                        "source": "initial",
-                        "rows": n,
-                    },
-                )
-            appended["1min"] = n
+            appended["1min"] = self.tiers["1min"].append(
+                _merge_stats(partial, existing),
+                properties={"source_lo": lo, "source_hi": hi, "source": "initial"},
+            ).row_count
             partial.unpersist()
-            merged.unpersist()
 
         # ---- coarser tiers: recompute exactly the touched buckets -----
         # (1H from 1min, 1D from 1H — still never rescanning the facts)
@@ -211,19 +201,10 @@ class SnapshotIncrementalRollup:
             needed = fine_resolved.withColumn(
                 "__cb", bucket_end(F.col("ts"), step)
             ).join(affected, ["conv_id", "role", "__cb"], "left_semi")
-            coarse_rows = rollup_tier(needed.drop("__cb"), step).persist()
-            n = coarse_rows.count()
-            if n:
-                self.tiers[coarse].append(
-                    coarse_rows,
-                    properties={
-                        "fine_snap_hi": fine_hi,
-                        "from": fine,
-                        "rows": n,
-                    },
-                )
-            appended[coarse] = n
-            coarse_rows.unpersist()
+            appended[coarse] = self.tiers[coarse].append(
+                rollup_tier(needed.drop("__cb"), step),
+                properties={"fine_snap_hi": fine_hi, "from": fine},
+            ).row_count
         self._auto_compact()
         return appended
 
@@ -238,21 +219,16 @@ class SnapshotIncrementalRollup:
         resolved = self.tier(name)
         if resolved is None:
             return 0
-        resolved = resolved.persist()
-        n = resolved.count()
-        self.tiers[name].append(
+        # a compaction supersedes all prior snapshots: readers resolve
+        # latest-wins, and every key it holds now has the max version
+        return self.tiers[name].append(
             resolved,
             properties={
                 "kind": "compaction",
                 "source_hi": self._consumed_up_to(name),
                 "fine_snap_hi": self._fine_consumed(name),
-                "rows": n,
             },
-        )
-        # a compaction supersedes all prior snapshots: readers resolve
-        # latest-wins, and every key it holds now has the max version
-        resolved.unpersist()
-        return n
+        ).row_count
 
     def _auto_compact(self) -> None:
         """Compact any tier whose merge-on-read window has grown past

@@ -9,9 +9,18 @@ DAG per run (batch, ``availableNow``-style):
         -> rollup 1min -> 1H -> 1D  (continuous aggregates)
 
 Each stage: read HWM checkpoint -> incremental slice -> transform ->
-TierTable.append (atomic) -> advance HWM, with lineage (source ->
-target snapshot) and throughput metrics recorded on both the snapshot
-properties and the checkpoint run log (north rule).
+commit, with lineage (source -> target snapshot) and throughput
+metrics recorded on both the snapshot properties and the checkpoint
+run log (north rule).
+
+Commit protocol (``_commit``): one Spark action per stage, the tier's
+partitioned parquet write. Observations at the top of the written plan
+(its result stage, so a retried task cannot count twice) gather the
+manifest's row count and ts range (``TierTable.append``), one max-HWM
+per checkpoint bucket (``CheckpointStore.hwm_metrics``) and the domain
+counters during the write; then the manifest commits atomically, then
+the HWMs advance. An empty slice commits no snapshot. Non-finalizing
+runs add one action per rollup/quantile tier (``_emit_complete``).
 
 Incremental contract (matches the reference's, coarsened): the
 reference reads each series from ``target.end_date + 1min``
@@ -25,7 +34,8 @@ merge-on-read tiers stay exact under arbitrary arrival order.
 HWM advancement is stage-aware:
 
 - ``checked``: max processed source ts per bucket (raw rows are final
-  the moment they're checked);
+  the moment they're checked), observed on the stage's own output turns
+  — gap-fill's inserted grid rows carry a NULL conv_id and are skipped;
 - aggregated/rollup tiers: max EMITTED bucket-end per bucket — a
   trimmed (MISS) or boundary-incomplete bucket stays below the HWM, so
   its source rows are re-read and the bucket recomputed when more data
@@ -53,7 +63,7 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .cache import release_caches
@@ -64,6 +74,23 @@ from .rollup import rollup_tier, rollup_transcripts
 from .schema import transcripts_to_series
 from .storage import CheckpointStore, TierTable
 from .timeutil import MICROS, parse_step
+
+
+# check flags counted on every ``checked`` commit (snapshot properties
+# and run log: ``flagged_<FLAG>``)
+CHECKED_FLAGS = ("RANGE", "SUSPECT", "TEMPORAL", "DATEINSERT", "FILLED")
+
+
+def _emit_complete(tier: DataFrame, source: DataFrame, step) -> DataFrame:
+    """Keep the ``tier`` buckets (labelled by their end ``ts``) that end
+    at or before ``source``'s last complete ``step`` boundary: a bucket
+    that may still receive rows stays un-emitted and below the HWM (the
+    rollup analog of trim-last). One Spark action on ``source``."""
+    max_ts = source.agg(F.max(F.unix_micros("ts"))).first()[0]
+    if max_ts is None:
+        return tier
+    boundary = (max_ts // step.micros) * step.micros
+    return tier.where(F.unix_micros("ts") <= F.lit(boundary))
 
 
 @dataclass
@@ -161,57 +188,54 @@ class Pipeline:
         self,
         stage: str,
         out_df: DataFrame,
-        hwm_df: DataFrame,
         hwm_key: str,
+        hwm_ts: Column,
         t0: float,
         lineage: dict,
-        keep_persisted: bool = False,
+        metrics: tuple[Column, ...] = (),
     ) -> StageResult:
-        """Persist output, append snapshot, advance HWM from hwm_df
-        (columns: hwm_key + ts). ``keep_persisted`` leaves ``out_df``
-        cached for a downstream consumer (fused rollups reuse the
-        finer tier in memory); the caller then owns the unpersist."""
-        table = self.table(stage)
-        out = out_df.persist()
-        # one agg over the persisted frame gives the manifest row count
-        # AND the snapshot's ts pruning range — append() then skips its
-        # post-write stats re-scan entirely.
-        ts_stat = (
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            if "ts" in out.columns
-            else F.lit(None).cast("long")
+        """Commit one stage slice with ONE Spark action, the tier write:
+        an observation on ``out_df`` gathers the per-bucket max of
+        ``hwm_ts`` keyed by ``hwm_key`` (the new HWMs) and the named
+        aggregates ``metrics`` (domain counters, recorded on the
+        snapshot and the run log) during the write, next to
+        ``TierTable.append``'s own row count and ts range. Then the
+        manifest commits, then the HWMs advance."""
+        observed = Observation()
+        out = out_df.observe(
+            observed,
+            *self.ckpt.hwm_metrics(F.col(hwm_key), hwm_ts),
+            *metrics,
         )
-        rows_out, ts_min, ts_max = out.agg(
-            F.count(F.lit(1)), F.min(ts_stat), F.max(ts_stat)
-        ).first()
-        snap = None
-        if rows_out:
+
+        def counters() -> dict:
+            return {
+                k: v for k, v in observed.get.items() if not k.startswith("__hwm_")
+            }
+
+        def properties(rows: int) -> dict:
             elapsed = time.time() - t0
-            snap = table.append(
-                out,
-                properties={
-                    **lineage,
-                    "rows": rows_out,
-                    "seconds": round(elapsed, 3),
-                    "rows_per_sec": round(rows_out / max(elapsed, 1e-9), 1),
-                },
-                stats={"rows": rows_out, "min_ts_us": ts_min, "max_ts_us": ts_max},
-            )
+            return {
+                **lineage,
+                **counters(),
+                "rows": rows,
+                "seconds": round(elapsed, 3),
+                "rows_per_sec": round(rows / max(elapsed, 1e-9), 1),
+            }
+
+        snap = self.table(stage).append(out, properties=properties)
+        snapshot_id = snap.snapshot_id if snap.row_count else None
         self.ckpt.advance(
             stage,
-            hwm_df,
-            key_col=hwm_key,
-            lineage={**lineage, "snapshot": snap.snapshot_id if snap else None},
+            observed.get,
+            lineage={**lineage, **counters(), "snapshot": snapshot_id},
         )
-        res = StageResult(
+        return StageResult(
             stage,
-            rows_out=rows_out,
+            rows_out=snap.row_count,
             seconds=time.time() - t0,
-            snapshot_id=snap.snapshot_id if snap else None,
+            snapshot_id=snapshot_id,
         )
-        if not keep_persisted:
-            out.unpersist()
-        return res
 
     # ------------------------------------------------------------------
 
@@ -258,13 +282,21 @@ class Pipeline:
                 checked = gap_fill(
                     narrow, step, max_gap_slots=self.max_gap_slots
                 )
+        # HWM from the turns themselves (inserted grid rows carry a NULL
+        # conv_id): every source turn passes through with its conv_id
+        # and ts, so this equals the source slice's per-bucket max
+        # without a second scan of the source
         res = self._commit(
             "checked",
             checked,
-            fresh.select(F.col("conv_id"), F.col("ts")),
             "conv_id",
+            F.when(F.col("conv_id").isNotNull(), F.col("ts")),
             t0,
             {"source": "transcripts"},
+            metrics=tuple(
+                F.count_if(F.col("flags").contains(flag)).alias(f"flagged_{flag}")
+                for flag in CHECKED_FLAGS
+            ),
         )
         release_caches(checked)
         return res
@@ -292,13 +324,10 @@ class Pipeline:
         # recomputing the regularize subtree for a per-key max
         agg = aggregate(reg, cfg, self.cfg.source_time_step, source_df=fresh)
         # HWM = emitted bucket end = label + offset (models.py:527-529)
-        hwm = agg.select(
-            F.col("key"),
-            F.timestamp_micros(
-                F.unix_micros(F.col("ts")) + F.lit(cfg.offset_minutes * 60 * MICROS)
-            ).alias("ts"),
+        hwm_ts = F.timestamp_micros(
+            F.unix_micros(F.col("ts")) + F.lit(cfg.offset_minutes * 60 * MICROS)
         )
-        res = self._commit(stage, agg, hwm, "key", t0, {"source": "checked"})
+        res = self._commit(stage, agg, "key", hwm_ts, t0, {"source": "checked"})
         if self.compress_tiers and res.rows_out:
             # Gorilla-compressed copy of the slice just committed
             # (north-star tier storage): blobs per (key, chunk) with the
@@ -353,12 +382,7 @@ class Pipeline:
             F.col("value").isNotNull() & ~F.isnan("value")
         ).select("key", bucket_end(F.col("ts"), step).alias("ts"), "value")
         if not finalize:
-            max_ts = fresh.agg(F.max(F.unix_micros("ts"))).first()[0]
-            if max_ts is not None:
-                boundary = (max_ts // step.micros) * step.micros
-                bucketed = bucketed.where(
-                    F.unix_micros("ts") <= F.lit(boundary)
-                )
+            bucketed = _emit_complete(bucketed, fresh, step)
         if cfg.hot_count_threshold is not None:
             out = quantile_rollup_auto(
                 bucketed,
@@ -371,7 +395,7 @@ class Pipeline:
         else:
             out = quantile_rollup(bucketed, ("key", "ts"), "value", cfg.quantiles)
         res = self._commit(
-            stage, out, out.select("key", "ts"), "key", t0, {"source": "checked"}
+            stage, out, "key", F.col("ts"), t0, {"source": "checked"}
         )
         release_caches(out)
         return res
@@ -408,15 +432,16 @@ class Pipeline:
 
         # --- 1min: directly from the fresh transcript slice ---------------
         t0 = time.time()
-        fresh = self.ckpt.filter_new(
-            transcripts, "rollup_1min", key_col="conv_id"
-        ).persist()
-        max_ts = fresh.agg(F.max(F.unix_micros("ts"))).first()[0]
+        fresh = self.ckpt.filter_new(transcripts, "rollup_1min", key_col="conv_id")
         step_1min = parse_step("1min")
-        t1min = rollup_transcripts(fresh, step_1min)
-        if not finalize and max_ts is not None:
-            boundary = (max_ts // step_1min.micros) * step_1min.micros
-            t1min = t1min.where(F.unix_micros("ts") <= F.lit(boundary))
+        if not finalize:
+            # read twice: the slice's last complete minute, then the rollup
+            fresh = fresh.persist()
+            t1min = _emit_complete(
+                rollup_transcripts(fresh, step_1min), fresh, step_1min
+            )
+        else:
+            t1min = rollup_transcripts(fresh, step_1min)
         # pre-append snapshot ids: the fused coarse tiers read the
         # finer table AS OF these, so this run's own append (already
         # in memory) is never re-read from disk
@@ -427,13 +452,8 @@ class Pipeline:
             t1min = t1min.persist()
         results.append(
             self._commit(
-                "rollup_1min",
-                t1min,
-                t1min.select(F.col("conv_id"), F.col("ts")),
-                "conv_id",
-                t0,
+                "rollup_1min", t1min, "conv_id", F.col("ts"), t0,
                 {"source": "transcripts"},
-                keep_persisted=fused,
             )
         )
         fresh.unpersist()
@@ -480,23 +500,15 @@ class Pipeline:
             finer_fresh = self.ckpt.filter_new(finer, stage, key_col="conv_id")
             finer_fresh = finer_fresh.dropDuplicates(["conv_id", "role", "ts"])
             tier = rollup_tier(finer_fresh, step)
-            finer_max = finer_fresh.agg(F.max(F.unix_micros("ts"))).first()[0]
-            if not finalize and finer_max is not None:
-                boundary = (finer_max // step.micros) * step.micros
-                tier = tier.where(F.unix_micros("ts") <= F.lit(boundary))
+            if not finalize:
+                tier = _emit_complete(tier, finer_fresh, step)
             if fused:
                 snap = self.table(stage).current_snapshot()
                 pre_sids[stage] = snap.snapshot_id if snap else None
                 tier = tier.persist()
             results.append(
                 self._commit(
-                    stage,
-                    tier,
-                    tier.select(F.col("conv_id"), F.col("ts")),
-                    "conv_id",
-                    t0,
-                    {"source": source_name},
-                    keep_persisted=fused,
+                    stage, tier, "conv_id", F.col("ts"), t0, {"source": source_name}
                 )
             )
             if fused:

@@ -54,18 +54,9 @@ def ts_seconds(c: Column) -> Column:
     return F.unix_timestamp(c.cast("timestamp"))
 
 
-def null_to_nan(c: Column) -> Column:
-    """Boundary normalization: storage NULL -> pipeline NaN."""
-    return F.coalesce(c.cast("double"), F.lit(NAN))
-
-
 def nan_to_null(c: Column) -> Column:
     """Boundary normalization: pipeline NaN -> NULL (for sinks/oracles)."""
     return F.when(~F.isnan(c), c)
-
-
-def value_is_missing(c: Column) -> Column:
-    return c.isNull() | F.isnan(c)
 
 
 # --- derived value channels over transcripts (SURVEY.md §1.4) ---------------

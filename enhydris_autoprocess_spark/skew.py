@@ -97,8 +97,3 @@ def chunked_apply_in_pandas(
     return applied.where(F.col("__home") == F.col("__chunk")).drop(
         "__home", "__chunk"
     )
-
-
-def salt_column(key, n_salts: int):
-    """Plain salt for explicit repartitioning before wide shuffles."""
-    return F.pmod(F.xxhash64(key, F.monotonically_increasing_id()), F.lit(n_salts))

@@ -14,7 +14,9 @@ into the scan filter as literals via a tiny in-memory DataFrame join,
 so the incremental read becomes
 ``WHERE ts > hwm(bucket)`` — Catalyst pushes the conjunctive ts bound
 (min over buckets) to Parquet as a scan filter, and the exact per-
-bucket cut is applied by the broadcast hash join. Idempotence: re-runs
+bucket cut is applied by the broadcast hash join. Advancing costs no
+Spark action: the per-bucket maxima are observed (``hwm_metrics``)
+during the tier write that commits the slice. Idempotence: re-runs
 read nothing new and append nothing (A4/S2 semantics).
 """
 
@@ -108,32 +110,38 @@ class CheckpointStore:
         )
         return out
 
-    def advance(
-        self,
-        stage: str,
-        df: DataFrame,
-        key_col: str = "conv_id",
-        ts_col: str = "ts",
-        lineage: dict | None = None,
-    ) -> dict:
-        """Compute per-bucket max ts of the processed slice and persist,
-        recording a run entry with lineage + metrics. Returns the run.
+    def hwm_metrics(self, key: Column, ts: Column) -> list[Column]:
+        """Per-bucket max of ``ts`` (epoch micros) as ``n_buckets``
+        aggregate columns, for a ``DataFrame.observe`` on the write that
+        commits a slice: the HWMs come out of that write with no pass of
+        their own. Rows with a NULL ``ts`` advance nothing. One
+        aggregate per bucket keeps the observed row — and the driver
+        side of ``advance`` — bounded by ``n_buckets``, not by data
+        size."""
+        bucket = bucket_col(key, self.n_buckets)
+        us = ts_micros(ts)
+        return [
+            F.max(F.when(bucket == b, us)).alias(f"__hwm_{b}")
+            for b in range(self.n_buckets)
+        ]
 
-        The collect here is bounded by ``n_buckets`` rows (the
-        checkpoint document is deliberately driver-side JSON), not by
-        data size — unlike per-key collects, it cannot OOM at scale."""
-        rows = (
-            df.groupBy(bucket_col(F.col(key_col), self.n_buckets).alias("__b"))
-            .agg(F.max(ts_micros(F.col(ts_col))).alias("__m"))
-            .collect()
-        )
+    def advance(
+        self, stage: str, observed: dict, lineage: dict | None = None
+    ) -> dict:
+        """Raise each bucket's HWM to its maximum in ``observed`` (the
+        values of ``hwm_metrics`` gathered during the commit's write)
+        and persist, recording a run entry with lineage + metrics.
+        Returns the run."""
         stage_state = self._state["stages"].setdefault(stage, {})
-        for r in rows:
-            b = str(int(r["__b"]))
-            stage_state[b] = max(int(r["__m"]), int(stage_state.get(b, 0)))
+        advanced = 0
+        for b in range(self.n_buckets):
+            m = observed.get(f"__hwm_{b}")
+            if m is not None:
+                stage_state[str(b)] = max(int(m), int(stage_state.get(str(b), 0)))
+                advanced += 1
         run = {
             "stage": stage,
-            "buckets_advanced": len(rows),
+            "buckets_advanced": advanced,
             **(lineage or {}),
         }
         self._state["runs"].append(run)

@@ -14,10 +14,14 @@ Layout:
     <root>/data/snap-<n>/part-*.parquet   (one directory per commit)
     <root>/manifest.jsonl                 (one JSON line per snapshot)
 
-Commit protocol: write data files first, then append the manifest line
-via write-temp + atomic rename of the whole manifest. Readers list
-files from the manifest only, so a crashed half-written data directory
-is invisible (Iceberg's snapshot isolation, poor man's edition).
+Commit protocol (``append``): one Spark action writes the data files
+and, through a ``DataFrame.observe`` on the written plan, gathers the
+snapshot's row count and partition-column range; then the manifest
+line is appended via write-temp + atomic rename of the whole manifest.
+Readers list files from the manifest only, so a crashed half-written
+data directory is invisible (Iceberg's snapshot isolation, poor man's
+edition; Delta Lake commits the same way — file stats are gathered
+while the files are written, then one log record is committed).
 
 Partitioning: data is written partitioned by ``days(ts)`` when a ts
 column exists (hypertable analog of the reference's TimescaleDB record
@@ -29,11 +33,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 _DAY_US = 86_400_000_000  # one UTC day in epoch-micros
@@ -122,25 +128,33 @@ class TierTable:
     def append(
         self,
         df: DataFrame,
-        properties: dict | None = None,
-        stats: dict | None = None,
+        properties: dict | Callable[[int], dict] | None = None,
     ) -> Snapshot:
-        """Atomic append; returns the committed snapshot.
+        """Atomic append in one Spark action; returns the snapshot.
+
+        The (day-)partitioned parquet write into a fresh directory is
+        the only action: an ``Observation`` at the top of the written
+        plan (the write's result stage, so a retried task cannot count
+        twice) gathers the row count and the partition column's
+        min/max. Then the manifest commits (write-temp + rename); a
+        crash before that leaves an orphan directory no reader sees.
+        An empty write commits nothing: its directory is removed and
+        the returned snapshot (``row_count == 0``) is not in the
+        manifest.
 
         ``properties`` carries lineage + metrics (source snapshot ids,
-        HWMs, rows/sec) into the manifest, the analog of Iceberg
-        snapshot summary properties (north rule: per-partition
-        checkpoints with lineage + throughput metrics).
-
-        ``stats``: precomputed ``{"rows": n, "min_ts_us": ...,
-        "max_ts_us": ...}`` (e.g. from an agg over the caller's
-        already-persisted frame) — skips the one post-write stats scan
-        otherwise needed for the manifest row count and pruning range.
+        rows/sec) into the manifest, the analog of Iceberg snapshot
+        summary properties — or is a function of the row count
+        returning them, called between the write and the commit so a
+        caller can record what its own observations gathered during
+        the write.
         """
         snaps = self.snapshots()
         sid = (snaps[-1].snapshot_id + 1) if snaps else 1
+        parent = snaps[-1].snapshot_id if snaps else None
         data_dir = os.path.join(self.root, "data", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
         parts = list(self.partition_by)
+        stats = [F.count(F.lit(1)).alias("rows")]
         if (
             self.partition_days_col is not None
             and self.partition_days_col in df.columns
@@ -152,55 +166,36 @@ class TierTable:
             # cutoff could land in a day directory expire() drops.
             # floor-divide micros by a UTC day instead, so the file
             # layout and the UTC cutoff-day comparison always agree.
+            us = self._part_micros(df)
             df = df.withColumn(
                 "__day",
-                F.date_from_unix_date(
-                    F.floor(self._part_micros(df) / F.lit(_DAY_US)).cast("int")
-                ),
+                F.date_from_unix_date(F.floor(us / F.lit(_DAY_US)).cast("int")),
             )
             parts.insert(0, "__day")
-        writer = df.write.mode("errorifexists")
+            # the snapshot's range, which read(min_ts_us=...) uses to
+            # skip whole snapshot directories (Iceberg manifest file
+            # pruning)
+            stats += [F.min(us).alias("min_ts_us"), F.max(us).alias("max_ts_us")]
+        observed = Observation()
+        writer = df.observe(observed, *stats).write.mode("errorifexists")
         if parts:
             writer = writer.partitionBy(*parts)
         writer.parquet(data_dir)
-        stats_props: dict = {}
-        if stats is not None:
-            row_count = int(stats["rows"])
-            if stats.get("min_ts_us") is not None:
-                stats_props = {
-                    "min_ts_us": int(stats["min_ts_us"]),
-                    "max_ts_us": int(stats["max_ts_us"]),
-                }
-        else:
-            # One stats pass over the files just written (footer-stats-
-            # only for min/max): row count for the manifest plus the
-            # snapshot's ts range, which read(min_ts_us=...) uses to
-            # skip whole snapshot directories (Iceberg manifest file
-            # pruning). A count-only re-read cost the same scan and
-            # carried no pruning metadata.
-            spark = df.sparkSession
-            written = spark.read.parquet(data_dir)
-            if (
-                self.partition_days_col is not None
-                and self.partition_days_col in written.columns
-            ):
-                ts = self._part_micros(written)
-                row_count, ts_min, ts_max = written.agg(
-                    F.count(F.lit(1)), F.min(ts), F.max(ts)
-                ).first()
-                if ts_min is not None:
-                    stats_props = {
-                        "min_ts_us": int(ts_min),
-                        "max_ts_us": int(ts_max),
-                    }
-            else:
-                row_count = written.count()
+        written = observed.get
+        row_count = int(written.pop("rows"))
+        # a range only when some partition value is non-NULL
+        written = {k: int(v) for k, v in written.items() if v is not None}
+        if not row_count:
+            shutil.rmtree(data_dir, ignore_errors=True)
+            return Snapshot(sid, parent, data_dir, 0)
+        if callable(properties):
+            properties = properties(row_count)
         snap = Snapshot(
             sid,
-            snaps[-1].snapshot_id if snaps else None,
+            parent,
             data_dir,
             row_count,
-            {"committed_at": time.time(), **stats_props, **(properties or {})},
+            {"committed_at": time.time(), **written, **(properties or {})},
         )
         tmp = self._manifest_path + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:

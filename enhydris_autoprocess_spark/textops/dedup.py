@@ -294,9 +294,13 @@ def minhash_dedup_pairs(
     and skips the signature re-attach stage AND the signature cache —
     for callers that re-verify candidates with an exact measure
     anyway (the driver's minhash_dedup gate does exact
-    shingle-Jaccard at the same threshold, so the estimate filter
-    could only remove pairs the exact filter would remove too, and
-    its two broadcast-attach jobs were pure overhead)."""
+    shingle-Jaccard at the same threshold). The estimate is a noisy,
+    different measure — a pair with exact Jaccard >= threshold can
+    estimate below it — so dropping the filter is not
+    output-identical: the candidates form a superset and the exact
+    filter is unchanged, so the verified output can only grow toward
+    the all-pairs answer, and the two broadcast-attach jobs are
+    gone."""
     # widen the scan BEFORE the signature kernel: the driver's corpus
     # is a single-row-group parquet file, which would serialize the
     # Arrow kernel on one core (guide §2.5 "input skew"; measured

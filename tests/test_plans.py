@@ -117,8 +117,9 @@ def test_rollup_tiers_single_raw_row_exchange(spark, tmp_path):
     aggregation states (rollup_hourly) or shuffling twice
     (tier_1d_from_1h). The union-of-aggs form must stay row-identical
     to GROUPING SETS ((user_id, ts), (user_id, event_type, ts)) with
-    both sets' event_type coalesced, and the daily tier's plan must
-    hold a single exchange of the raw rows."""
+    both sets' event_type coalesced; the hourly plan holds exactly two
+    raw-row exchanges (one per branch) and the daily tier's plan a
+    single one."""
     import random
 
     import __spark_entry__ as e
@@ -165,6 +166,15 @@ def test_rollup_tiers_single_raw_row_exchange(spark, tmp_path):
     assert got.columns == ref.columns
     key = lambda r: tuple(str(v) for v in r)
     assert sorted(got.collect(), key=key) == sorted(ref.collect(), key=key)
+
+    # rollup_hourly: one raw-row exchange per union branch — the
+    # branches prune different columns, so neither the scan nor the
+    # shuffle is reused (and no aggregation-state Expand appears)
+    p = _plan(e.q_rollup_hourly(spark, path))
+    assert p.count("Exchange hashpartitioning(user_id") == 2
+    assert "ReusedExchange" not in p
+    assert p.count("FileScan parquet") == 2
+    assert "Expand" not in p
 
     p = _plan(e.q_tier_1d_from_1h(spark, path))
     assert p.count("Exchange") == 1

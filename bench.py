@@ -328,14 +328,16 @@ def _extra_queries():
 
 def gorilla_codec_bench(n: int = 65536) -> dict:
     """Pure-numpy codec micro-bench (no Spark): points/s for the scalar
-    reference encoder, the vectorized batch encoder, and decode."""
+    encoder (the tests' field-by-field oracle), the vectorized encoder
+    (``encode_chunks_multi``, one segment per 4096 points) and the
+    batch decoder (``decode_chunks_batch``)."""
     import numpy as np
 
     from enhydris_autoprocess_spark.storage.gorilla import (
-        decode_chunk,
-        encode_chunk,
-        encode_chunks_batch,
+        decode_chunks_batch,
+        encode_chunks_multi,
     )
+    from tests.gorilla_oracle import encode_chunk
 
     rng = np.random.RandomState(0)
     ts = np.cumsum(
@@ -343,6 +345,8 @@ def gorilla_codec_bench(n: int = 65536) -> dict:
     ).astype(np.int64)
     vals = np.round(np.cumsum(rng.randn(n)), 3)
     vals[rng.rand(n) < 0.1] = np.nan
+    starts = np.arange(0, n, 4096)
+    lens = np.minimum(4096, n - starts)
 
     def best(f, reps=3):
         b = float("inf")
@@ -358,9 +362,9 @@ def gorilla_codec_bench(n: int = 65536) -> dict:
             for i in range(0, n, 4096)
         ]
     )
-    t_fast = best(lambda: encode_chunks_batch(ts, vals, 4096))
-    blobs = encode_chunks_batch(ts, vals, 4096)
-    t_dec = best(lambda: [decode_chunk(b) for _, _, b in blobs])
+    t_fast = best(lambda: encode_chunks_multi(ts, vals, starts, lens))
+    blobs = [b for _, _, b in encode_chunks_multi(ts, vals, starts, lens)]
+    t_dec = best(lambda: decode_chunks_batch(blobs))
     return {
         "points": n,
         "encode_scalar_pts_per_sec": round(n / t_scalar, 1),

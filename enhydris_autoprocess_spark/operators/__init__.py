@@ -4,5 +4,5 @@ from .curve import curve_interpolation  # noqa: F401
 from .regularize import regularize  # noqa: F401
 from .aggregate import aggregate, aggregate_step  # noqa: F401
 from .checks import run_checks  # noqa: F401
-from .gapfill import gap_fill, gap_fill_auto, gap_fill_sql  # noqa: F401
+from .gapfill import gap_fill, gap_fill_auto  # noqa: F401
 from .session import sessionize, sessionize_native  # noqa: F401

@@ -2,19 +2,17 @@
 missing values (north-star requirement; no reference analog —
 SURVEY.md §2.5 I2).
 
-Two equivalent implementations, tested against each other:
+One implementation, ``gap_fill`` — the spec-mandated pandas/Arrow UDF
+path (BASELINE.json north_star: "gap-fills missing turns via flag-aware
+linear interpolation inside pandas/Arrow UDFs"): one key-partitioned
+``mapInPandas`` whose vectorized numpy kernel completes the grid and
+interpolates many keys per call, no per-row Python. Hot keys take its
+time-chunked mode (``chunk_span_slots``; ``gap_fill_auto`` routes them
+by span). The tests check it against a pure window-function oracle
+(JVM-side: previous / next known anchor via ``last(..., ignorenulls)``
+over unbounded frames, then the lerp formula).
 
-- ``gap_fill`` — the spec-mandated pandas/Arrow UDF path
-  (BASELINE.json north_star: "gap-fills missing turns via flag-aware
-  linear interpolation inside pandas/Arrow UDFs"): ``applyInPandas``
-  per key over the grid-completed frame; vectorized numpy inside, no
-  per-row Python.
-- ``gap_fill_sql`` — pure window-function path (JVM-side): previous /
-  next known anchor via ``last(..., ignorenulls)`` over unbounded
-  frames, then the lerp formula. Used by the bench as the fast-path
-  comparison.
-
-Flag-aware semantics (both): a value is "missing" if NULL or NaN;
+Flag-aware semantics: a value is "missing" if NULL or NaN;
 grid rows that did not exist are inserted with flag "DATEINSERT"
 (token reused from regularization, models.py:481); every interpolated
 value additionally gets flag "FILLED"; leading/trailing gaps (no anchor
@@ -29,11 +27,10 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import carry_caches
-from ..flags import append_flag
 from ..schema import NAN, ts_micros
 from ..timeutil import MICROS, Step
 
@@ -238,7 +235,7 @@ def _fill_pdf(
 
     ``offgrid_col``: boolean column marking pass-through rows that are
     off the key's step grid — they neither anchor interpolation nor get
-    filled (mirrors the fused/SQL paths' ``~offgrid`` predicate).
+    filled (mirrors the fused path's ``~offgrid`` predicate).
     ``step_us``: when given, the ``max_gap_slots`` gate measures the
     anchors' TIME distance in slots instead of index distance — index
     distance miscounts when off-grid pass-through rows are interleaved.
@@ -517,73 +514,3 @@ def gap_fill_auto(
         num_partitions=num_partitions, keep_offgrid=keep_offgrid,
     )
     return carry_caches(cold.unionByName(hot), df)
-
-
-def gap_fill_sql(
-    df: DataFrame,
-    step: Step,
-    max_gap_slots: int | None = None,
-    fill_flag: str = "FILLED",
-    key_col: str = "key",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    flags_col: str = "flags",
-    keep_offgrid: bool = True,
-) -> DataFrame:
-    """JVM-only equivalent: anchors via last(ignorenulls) windows.
-
-    With ``keep_offgrid``, off-grid source rows survive the grid join
-    (full outer) and pass through unchanged; like the fused path they
-    are excluded from the interpolation anchors (and from being
-    filled), so both paths agree on which rows anchor. Duplicate
-    (key, ts) grid rows each survive as their own row here (the grid
-    row joins every duplicate), where the fused path elects one slot
-    winner — same row multiset, variant-specific slot election.
-    """
-    completed = complete_grid(
-        df, step, key_col, ts_col, value_col, flags_col,
-        keep_offgrid=keep_offgrid,
-    )
-    us = ts_micros(F.col(ts_col))
-    v = F.col(value_col)
-    # off-grid = not on the per-key min-anchored grid (the grid is
-    # anchored at the key's min ts, which is itself always on-grid)
-    w_key = Window.partitionBy(key_col)
-    offgrid = F.pmod(us - F.min(us).over(w_key), F.lit(step.micros)) != 0
-    known_v = F.when(~F.isnan(v) & ~offgrid, v)
-    known_t = F.when(~F.isnan(v) & ~offgrid, us)
-
-    wb = (
-        Window.partitionBy(key_col)
-        .orderBy(ts_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wf = (
-        Window.partitionBy(key_col)
-        .orderBy(ts_col)
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
-    prev_v = F.last(known_v, ignorenulls=True).over(wb)
-    prev_t = F.last(known_t, ignorenulls=True).over(wb)
-    next_v = F.first(known_v, ignorenulls=True).over(wf)
-    next_t = F.first(known_t, ignorenulls=True).over(wf)
-
-    can = (
-        F.isnan(v)
-        & ~offgrid
-        & prev_v.isNotNull()
-        & next_v.isNotNull()
-    )
-    if max_gap_slots is not None:
-        can = can & (
-            (next_t - prev_t) <= F.lit((max_gap_slots + 1) * step.micros)
-        )
-    frac = (us - prev_t).cast("double") / (next_t - prev_t).cast("double")
-    filled = prev_v + frac * (next_v - prev_v)
-
-    return completed.withColumns(
-        {
-            value_col: F.when(can, filled).otherwise(v),
-            flags_col: append_flag(F.col(flags_col), can, fill_flag),
-        }
-    )

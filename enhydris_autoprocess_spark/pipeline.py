@@ -49,12 +49,16 @@ one slice reprocessed; tier rows are keyed by (key, ts) so readers
 dedup naturally (at-least-once, like Celery redelivery in the
 reference).
 
+Rollups cascade: each coarse tier (1H, 1D) is rebuilt from the finer
+*stored* tier above its own HWM, never from raw rows — the hierarchical
+composition of coarse aggregates from finer ones.
+
 Skew: aggregations are partial+final (map-side combine absorbs hot
 conv_ids); the per-key serial stages — rocc's window sort and pandas
-gap-fill — are time-chunked for hot conversations by default
-(``hot_key_chunking``: rocc chunks unconditionally via JVM halo
-windows, gap-fill routes multi-chunk-span keys to the chunked variant
-— see operators/rocc.py and gap_fill_auto).
+gap-fill — are time-chunked for hot conversations
+(``hot_chunk_span_seconds``: rocc always chunks via JVM halo windows,
+gap-fill routes keys spanning more than one chunk to the chunked
+variant — see operators/rocc.py and gap_fill_auto).
 """
 
 from __future__ import annotations
@@ -68,7 +72,7 @@ from pyspark.sql import functions as F
 
 from .cache import release_caches
 from .config import PipelineConfig
-from .operators import aggregate, gap_fill, gap_fill_sql, regularize, run_checks
+from .operators import aggregate, gap_fill, regularize, run_checks
 from .operators.gapfill import gap_fill_auto
 from .rollup import rollup_tier, rollup_transcripts
 from .schema import transcripts_to_series
@@ -113,28 +117,24 @@ class Pipeline:
         cfg: PipelineConfig,
         channel: str = "text_len",
         n_buckets: int = 64,
-        use_sql_gapfill: bool = False,
         gap_fill_enabled: bool = True,
         max_gap_slots: int | None = 60,
         compress_tiers: bool = False,
-        hot_key_chunking: bool = True,
         hot_chunk_span_seconds: int = 7 * 86400,
-        fused_rollups: bool = False,
     ):
-        """``hot_key_chunking`` (default on): the two per-key serial
-        stages — the rate-of-change window sort and the pandas
-        gap-fill — split hot conversations into
-        ``hot_chunk_span_seconds`` time chunks so one conversation
-        holding 1% of 10^12 turns is span/chunk parallel tasks, not
-        one straggler. rocc chunks unconditionally (JVM window frames,
-        ~free); gap-fill routes only keys spanning more than one chunk
-        to the chunked variant (per-group pandas overhead would ruin
-        the common case — see gap_fill_auto). Output is identical
-        either way — including on dirty input with duplicate
-        (key, ts) rows, where both variants elect the same slot
-        winner via the (ts, value, flags) tie-break (pinned by
-        tests) — so the knob is excluded from the config hash and
-        flipping it does not invalidate checkpoints.
+        """``hot_chunk_span_seconds``: the two per-key serial stages —
+        the rate-of-change window sort and the pandas gap-fill — split
+        hot conversations into time chunks of this span, so one
+        conversation holding 1% of 10^12 turns is span/chunk parallel
+        tasks, not one straggler. rocc always chunks (JVM window
+        frames, ~free); gap-fill routes only keys spanning more than
+        one chunk to the chunked variant (per-group pandas overhead
+        would ruin the common case — see gap_fill_auto). Output does
+        not depend on the span — including on dirty input with
+        duplicate (key, ts) rows, where both gap-fill variants elect
+        the same slot winner via the (ts, value, flags) tie-break
+        (pinned by tests) — so it is excluded from the config hash and
+        changing it does not invalidate checkpoints.
         """
         self.spark = spark
         self.cfg = cfg
@@ -145,24 +145,15 @@ class Pipeline:
         # invalidates all HWMs so affected series reprocess fully.
         import hashlib
 
-        cfg_repr = repr((cfg, channel, use_sql_gapfill, gap_fill_enabled, max_gap_slots))
+        cfg_repr = repr((cfg, channel, gap_fill_enabled, max_gap_slots))
         self.config_invalidated = self.ckpt.ensure_config(
             hashlib.sha256(cfg_repr.encode()).hexdigest()[:16]
         )
         self.tables: dict[str, TierTable] = {}
-        self.use_sql_gapfill = use_sql_gapfill
         self.gap_fill_enabled = gap_fill_enabled
         self.max_gap_slots = max_gap_slots
         self.compress_tiers = compress_tiers
-        self.hot_key_chunking = hot_key_chunking
         self.hot_chunk_span_seconds = hot_chunk_span_seconds
-        # ``fused_rollups``: compute the coarser rollup tiers from the
-        # in-memory finer slice instead of re-reading the finer tier's
-        # freshly written parquet (see run_rollups). Output-identical
-        # (pinned by tests), so — like hot_key_chunking — the knob is
-        # excluded from the config hash and never invalidates
-        # checkpoints.
-        self.fused_rollups = fused_rollups
 
     def table(self, name: str) -> TierTable:
         if name not in self.tables:
@@ -246,30 +237,21 @@ class Pipeline:
         fresh = self.ckpt.filter_new(transcripts, "checked", key_col="conv_id")
         series = transcripts_to_series(fresh, channel=self.channel)
         checked = run_checks(
-            series,
-            self.cfg,
-            chunk_span_seconds=(
-                self.hot_chunk_span_seconds if self.hot_key_chunking else None
-            ),
+            series, self.cfg, chunk_span_seconds=self.hot_chunk_span_seconds
         )
         if self.gap_fill_enabled:
             step = parse_step(self.cfg.source_time_step)
-            # conv_id/turn_idx ride through the gap-fill schema (both
-            # variants round-trip extra columns; inserted grid rows get
-            # them NULL) — re-attaching them with a (key, ts) equi-join
-            # against the checked output would re-shuffle the whole
-            # checked table once more per run for nothing.
+            # conv_id/turn_idx ride through the gap-fill schema (extra
+            # columns round-trip; inserted grid rows get them NULL) —
+            # re-attaching them with a (key, ts) equi-join against the
+            # checked output would re-shuffle the whole checked table
+            # once more per run for nothing.
             narrow = checked.select(
                 "key", "ts", "value", "flags", "conv_id", "turn_idx"
             )
             hot_span_slots = self.hot_chunk_span_seconds * MICROS // step.micros
-            if self.use_sql_gapfill:
-                checked = gap_fill_sql(
-                    narrow, step, max_gap_slots=self.max_gap_slots
-                )
-            elif (
-                self.hot_key_chunking
-                and self.max_gap_slots is not None
+            if (
+                self.max_gap_slots is not None
                 and hot_span_slots > self.max_gap_slots + 1
             ):
                 checked = gap_fill_auto(
@@ -401,33 +383,14 @@ class Pipeline:
         return res
 
     def run_rollups(
-        self,
-        transcripts: DataFrame,
-        finalize: bool = False,
-        fused: bool | None = None,
+        self, transcripts: DataFrame, finalize: bool = False
     ) -> list[StageResult]:
         """Continuous-aggregate tiers 1min -> 1H -> 1D.
 
         Unless ``finalize``, each tier only emits buckets ending at or
         before the slice's last complete bucket boundary, so a bucket
         that may still receive rows stays un-emitted and below the HWM
-        (the rollup analog of trim-last).
-
-        ``fused`` (default: the constructor's ``fused_rollups``,
-        VERDICT r05 #7): the cascade path re-reads each finer
-        TierTable from storage AFTER appending to it — at 10^12-turn
-        scale that's a full re-scan of freshly written parquet per
-        coarse tier per run. The fused path instead keeps the finer
-        slice persisted in memory and unions it with only the finer
-        table's *pre-append* tail above the coarse HWM (the held-back
-        incomplete-bucket rows from earlier runs, read as of the
-        pre-commit snapshot), so one lineage flows scan -> 1min -> 1H
-        -> 1D and storage is written, never re-read, within a run.
-        Tier contents are identical either way (pinned by
-        tests/test_pipeline_storage.py), so the knob is excluded from
-        the config hash."""
-        if fused is None:
-            fused = self.fused_rollups
+        (the rollup analog of trim-last)."""
         results = []
 
         # --- 1min: directly from the fresh transcript slice ---------------
@@ -442,14 +405,6 @@ class Pipeline:
             )
         else:
             t1min = rollup_transcripts(fresh, step_1min)
-        # pre-append snapshot ids: the fused coarse tiers read the
-        # finer table AS OF these, so this run's own append (already
-        # in memory) is never re-read from disk
-        pre_sids: dict[str, int | None] = {}
-        if fused:
-            snap = self.table("rollup_1min").current_snapshot()
-            pre_sids["rollup_1min"] = snap.snapshot_id if snap else None
-            t1min = t1min.persist()
         results.append(
             self._commit(
                 "rollup_1min", t1min, "conv_id", F.col("ts"), t0,
@@ -457,7 +412,6 @@ class Pipeline:
             )
         )
         fresh.unpersist()
-        prev_new = t1min  # persisted iff fused
 
         # --- coarser tiers: incremental over the FULL finer tier table ----
         # A coarse bucket can span finer rows emitted by earlier runs, so
@@ -469,53 +423,22 @@ class Pipeline:
             t0 = time.time()
             stage = f"rollup_{tier_step}"
             step = parse_step(tier_step)
-            if fused:
-                # pre-append tail (held-back coarse buckets from
-                # earlier runs) + this run's in-memory finer rows —
-                # together exactly what the cascade's post-append read
-                # returns, without re-scanning the fresh parquet
-                tail = (
-                    self.table(source_name).read(
-                        self.spark,
-                        as_of_snapshot=pre_sids[source_name],
-                        min_ts_us=self.ckpt.global_min_hwm(stage),
-                    )
-                    if pre_sids[source_name] is not None
-                    else None
-                )
-                finer = (
-                    prev_new
-                    if tail is None
-                    else tail.unionByName(prev_new)
-                )
-            else:
-                finer = self.table(source_name).read(
-                    self.spark, min_ts_us=self.ckpt.global_min_hwm(stage)
-                )
-                if finer is None:
-                    results.append(
-                        StageResult(stage, 0, time.time() - t0, None)
-                    )
-                    continue
+            finer = self.table(source_name).read(
+                self.spark, min_ts_us=self.ckpt.global_min_hwm(stage)
+            )
+            if finer is None:
+                results.append(StageResult(stage, 0, time.time() - t0, None))
+                continue
             finer_fresh = self.ckpt.filter_new(finer, stage, key_col="conv_id")
             finer_fresh = finer_fresh.dropDuplicates(["conv_id", "role", "ts"])
             tier = rollup_tier(finer_fresh, step)
             if not finalize:
                 tier = _emit_complete(tier, finer_fresh, step)
-            if fused:
-                snap = self.table(stage).current_snapshot()
-                pre_sids[stage] = snap.snapshot_id if snap else None
-                tier = tier.persist()
             results.append(
                 self._commit(
                     stage, tier, "conv_id", F.col("ts"), t0, {"source": source_name}
                 )
             )
-            if fused:
-                prev_new.unpersist()
-                prev_new = tier
-        if fused:
-            prev_new.unpersist()
         return results
 
     def run(

@@ -2,36 +2,14 @@
 delta-of-delta timestamps + XOR-encoded float values, packed per
 (key, chunk) into BinaryType blocks inside Arrow-batched pandas UDFs.
 
-Two wire formats share the 16-byte header
-(count:uint32, t0:int64 micros, flags:uint32); ``decode_chunk``
-dispatches on ``flags``.
-
-v1 (flags=0) — the classic interleaved Gorilla bitstream (MSB-first),
-written by the scalar ``encode_chunk``:
-
-Timestamps (Facebook Gorilla §4.1.1 layout, micros resolution with
-the paper's value ranges scaled to seconds-as-micros):
-  first delta: 64-bit signed (vs t0)
-  then per point, dod = delta_i - delta_{i-1}:
-    '0'                    dod == 0
-    '10'  + 10-bit zigzag  |dod| fits
-    '110' + 24-bit zigzag
-    '1110'+ 40-bit zigzag
-    '1111'+ 64-bit raw
-Values (§4.1.2):
-  first value: 64 raw bits
-  then xor = bits(v_i) ^ bits(v_{i-1}):
-    '0'                    xor == 0
-    '10' + meaningful bits if leading>=prev_leading and trailing>=prev_trailing
-    '11' + 5-bit leading + 6-bit sig-len + bits otherwise
-
-v2 (flags=1) — the STREAM-SEPARATED layout written by the vectorized
-encoders. Interleaving control bits with payloads (v1) makes every
-field's position depend on all prior control bits, forcing decode to
-walk the stream point by point; v2 groups the fixed-width control
-streams together so every field offset is one table lookup + cumsum
-and the whole chunk decodes as ~10 numpy gathers (measured ~50x the
-v1 per-point Python decode). Layout after the header, bit-contiguous:
+One wire format, the STREAM-SEPARATED layout. A 16-byte header
+(count:uint32, t0:int64 micros, flags:uint32 = 1) is followed by
+fixed-width control streams grouped apart from their payloads, so every
+field offset is one table lookup + cumsum and a whole batch of chunks
+decodes as a few segmented numpy gathers (the classic interleaved
+Gorilla bitstream makes every field's position depend on all prior
+control bits, forcing decode to walk the stream point by point).
+Layout after the header, bit-contiguous, MSB-first:
   [n>1]  first delta: 64-bit signed (vs t0)
   [n>2]  dod class stream: 2 bits per dod —
            0: dod == 0 (no payload)   1: 12-bit zigzag payload
@@ -43,16 +21,17 @@ v1 per-point Python decode). Layout after the header, bit-contiguous:
          per NONZERO xor — always the explicit-window form
   [n>1]  value payload stream: sig bits per nonzero xor
   pad to byte
-Size vs v1 on typical tier data: +1 bit/point for dod==0 runs,
--1 bit per changed value; net within ~2% either way.
+Deltas and dods are int64 modulo 2^64 on both sides, and zigzag is a
+bijection on uint64, so every timestamp series round-trips, int64
+extremes included: a dod whose zigzag needs more than 32 bits is class
+3 and stores its raw 64 bits. Any other header ``flags`` is rejected.
 
-NaN encodes naturally in both (its bit pattern XORs like any other),
-so the pipeline's NaN-means-missing convention round-trips exactly.
+NaN encodes naturally (its bit pattern XORs like any other), so the
+pipeline's NaN-means-missing convention round-trips exactly.
 
-``encode_chunk`` keeps the scalar v1 implementation (with the '10'
-window-reuse form) for round-trip cross-checks and as the fallback
-for pathological dods; ``encode_chunk_fast``/``encode_chunks_batch``
-write v2 via the field-granular ``_pack_bits`` word-lane packer.
+``encode_chunks_multi`` and ``decode_chunks_batch`` are the one codec
+pair, both vectorized over many chunks of many keys at once; a scalar
+field-by-field encoder/decoder lives in the tests as their oracle.
 Columnar Parquet remains the physical container: a compressed tier is
 a normal DataFrame ``(key, chunk_start_us, chunk_end_us, n, blob)``
 that any TierTable can append/read. ``chunk_end_us`` (the last point's
@@ -71,7 +50,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 CHUNK = 4096
 
@@ -79,120 +57,8 @@ COMPRESSED_SCHEMA = (
     "key string, chunk_start_us long, chunk_end_us long, n int, blob binary"
 )
 
-
-class _BitWriter:
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, bits: int) -> None:
-        self.acc = (self.acc << bits) | (value & ((1 << bits) - 1))
-        self.nbits += bits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def bytes(self) -> bytes:
-        if self.nbits:
-            return bytes(self.buf) + bytes([(self.acc << (8 - self.nbits)) & 0xFF])
-        return bytes(self.buf)
-
-
-class _BitReader:
-    """MSB-first bit reader with a byte-fed accumulator: a field read
-    is O(1) small-int arithmetic, not one Python iteration per BIT as
-    the original reader did (~35µs/point at typical field widths — the
-    decode hot loop the round-1 verdict flagged)."""
-
-    __slots__ = ("data", "byte_pos", "acc", "navail")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.byte_pos = 0
-        self.acc = 0
-        self.navail = 0
-
-    def read(self, bits: int) -> int:
-        acc, navail, p = self.acc, self.navail, self.byte_pos
-        while navail < bits:
-            acc = (acc << 8) | self.data[p]
-            p += 1
-            navail += 8
-        navail -= bits
-        self.acc = acc & ((1 << navail) - 1)
-        self.navail = navail
-        self.byte_pos = p
-        return acc >> navail
-
-
-def _zigzag(v: int) -> int:
-    return (v << 1) ^ (v >> 63)
-
-
-def _unzigzag(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
-
-
-def encode_chunk(ts_us: np.ndarray, values: np.ndarray) -> bytes:
-    n = len(ts_us)
-    assert n >= 1
-    w = _BitWriter()
-    t0 = int(ts_us[0])
-    header = struct.pack("<IqI", n, t0, 0)
-    if n > 1:
-        # 64-bit first delta: the paper's 14-bit field assumes seconds
-        # resolution and sub-4h gaps; micro-resolution tier series can
-        # open with multi-day gaps, which overflowed a 32-bit field
-        # (caught by the tier round-trip test).
-        first_delta = int(ts_us[1]) - t0
-        w.write(first_delta & 0xFFFFFFFFFFFFFFFF, 64)
-    deltas = np.diff(ts_us.astype(np.int64))
-    dods = np.diff(deltas)
-    for dod in dods.tolist():
-        if dod == 0:
-            w.write(0, 1)
-        else:
-            z = _zigzag(dod)
-            if z < (1 << 10):
-                w.write(0b10, 2)
-                w.write(z, 10)
-            elif z < (1 << 24):
-                w.write(0b110, 3)
-                w.write(z, 24)
-            elif z < (1 << 40):
-                w.write(0b1110, 4)
-                w.write(z, 40)
-            else:
-                w.write(0b1111, 4)
-                w.write(dod & 0xFFFFFFFFFFFFFFFF, 64)
-    bits = values.astype(np.float64).view(np.uint64)
-    w.write(int(bits[0]), 64)
-    prev = int(bits[0])
-    prev_lead, prev_sig = 65, 0  # invalid -> force '11' branch first time
-    for b in bits[1:].tolist():
-        xor = prev ^ int(b)
-        if xor == 0:
-            w.write(0, 1)
-        else:
-            lead = 64 - xor.bit_length()
-            trail = (xor & -xor).bit_length() - 1
-            lead = min(lead, 31)
-            sig = 64 - lead - trail
-            if prev_lead <= lead and (64 - prev_lead - prev_sig) <= trail and prev_sig:
-                w.write(0b10, 2)
-                w.write(xor >> (64 - prev_lead - prev_sig), prev_sig)
-            else:
-                w.write(0b11, 2)
-                w.write(lead, 5)
-                w.write(sig & 0x3F, 6)  # 64 encodes as 0
-                w.write(xor >> trail, sig)
-                prev_lead, prev_sig = lead, sig
-        prev = int(b)
-    return header + w.bytes()
+_HEADER = "<IqI"  # count, t0 (micros), flags
+_FORMAT = 1  # header flags of the stream-separated layout
 
 
 def _pack_bits(vals: np.ndarray, widths: np.ndarray) -> bytes:
@@ -252,166 +118,38 @@ _DOD_BOUNDS = np.array([1 << 12, 1 << 32], dtype=np.uint64)
 _DOD_PAYLOAD_W = np.array([0, 12, 32, 64], dtype=np.int64)
 
 
-def _pack_uniform(vals: np.ndarray, width: int) -> tuple[np.ndarray, np.ndarray]:
-    """Pre-pack a uniform-width stream (width must divide 64) into
-    64-bit fields plus one partial tail field. The bit layout is
-    identical to feeding the symbols to ``_pack_bits`` one by one —
-    this just collapses the per-field packer overhead by 64/width on
-    the control streams (encode-side only; decode addresses symbols by
-    ``arange`` offsets and never sees field boundaries)."""
-    per = 64 // width
-    n = len(vals)
-    v = vals.astype(np.uint64)
-    nfull = n // per
-    shifts = (np.arange(per, dtype=np.uint64)[::-1] * np.uint64(width))
-    words = np.bitwise_or.reduce(
-        v[: nfull * per].reshape(nfull, per) << shifts[None, :], axis=1
-    )
-    rem = n - nfull * per
-    if rem:
-        tail = np.bitwise_or.reduce(
-            v[nfull * per :] << shifts[:rem] - np.uint64((per - rem) * width)
-        )
-        return (
-            np.r_[words, tail],
-            np.r_[np.full(nfull, 64, dtype=np.int64), rem * width],
-        )
-    return words, np.full(nfull, 64, dtype=np.int64)
-
-
-def _encode_fields(
-    ts_us: np.ndarray, values: np.ndarray
-) -> tuple[list[np.ndarray], list[np.ndarray]] | None:
-    """(field values, field widths) for one chunk's v2 bitstream, or
-    None when the chunk needs the scalar v1 fallback (pathological dods
-    where vectorized zigzag could wrap: |dod| >= 2^60). The predicate
-    is the overflow-safe two-sided compare shared with
-    ``encode_chunks_multi`` — ``np.abs(int64-min)`` wraps negative and
-    would silently keep such a chunk on v2 (ADVICE r04)."""
-    n = len(ts_us)
-    t = ts_us.astype(np.int64)
-    deltas = np.diff(t)
-    dods = np.diff(deltas)
-    if len(dods) and bool(
-        ((dods >= (1 << 60)) | (dods <= -(1 << 60))).any()
-    ):
-        return None
-
-    fields_v: list[np.ndarray] = []
-    fields_w: list[np.ndarray] = []
-    if n > 1:
-        fields_v.append(np.array([deltas[0]], dtype=np.int64).view(np.uint64))
-        fields_w.append(np.array([64]))
-
-    if len(dods):
-        z = ((dods << 1) ^ (dods >> 63)).view(np.uint64)
-        # class 0: dod==0; classes 1-3 by zigzag magnitude — one
-        # searchsorted + table lookups instead of an np.select
-        # (select materializes every choice over the full array)
-        cls = 1 + np.searchsorted(_DOD_BOUNDS, z, side="right")
-        cls[dods == 0] = 0
-        # v2: the 2-bit class codes form their own stream, then the
-        # payloads — both vectorially addressable on decode
-        cls_v, cls_w = _pack_uniform(cls, 2)
-        fields_v.append(cls_v)
-        fields_w.append(cls_w)
-        pay = np.where(cls == 3, dods.view(np.uint64), z)
-        fields_v.append(pay)
-        fields_w.append(_DOD_PAYLOAD_W[cls])
-
-    bits = values.astype(np.float64).view(np.uint64)
-    fields_v.append(bits[:1])
-    fields_w.append(np.array([64]))
-    if n > 1:
-        xor = bits[1:] ^ bits[:-1]
-        nz = xor != 0
-        # trailing zeros exactly: the isolated lowest set bit is a
-        # power of two, exactly representable in float64, so log2 is
-        # exact. The top-bit index comes from log2 of the full value,
-        # which float rounding can put off by one in either direction —
-        # two exact shift-checks pin it (numpy has no clz; an unpacked
-        # bit matrix + argmax measured ~2x the whole encoder's budget).
-        safe = np.where(nz, xor, np.uint64(1))
-        lsb = safe & (~safe + np.uint64(1))
-        trail = np.log2(lsb.astype(np.float64)).astype(np.int64)
-        k = np.minimum(
-            np.log2(safe.astype(np.float64)).astype(np.int64), 63
-        )  # ~index of top set bit, +-1
-        k = np.where(safe >> k.astype(np.uint64) == 0, k - 1, k)
-        k = np.where(
-            (k < 63) & (safe >> (k + 1).astype(np.uint64) != 0), k + 1, k
-        )
-        lead = np.minimum(63 - k, 31)
-        sig = 64 - lead - trail
-        # v2 streams: 1-bit nonzero controls, then 11-bit lead/sig per
-        # nonzero, then the payloads — three separately-offsettable
-        # streams instead of per-value interleaving
-        ctrl_v, ctrl_w = _pack_uniform(nz, 1)
-        fields_v.append(ctrl_v)
-        fields_w.append(ctrl_w)
-        lead_nz = lead[nz].astype(np.uint64)
-        sig_nz = sig[nz]
-        fields_v.append(
-            (lead_nz << np.uint64(6)) | (sig_nz.astype(np.uint64) & np.uint64(0x3F))
-        )
-        fields_w.append(np.full(int(nz.sum()), 11, dtype=np.int64))
-        fields_v.append(xor[nz] >> trail[nz].astype(np.uint64))
-        fields_w.append(sig_nz)
-    return fields_v, fields_w
-
-
-def encode_chunk_fast(ts_us: np.ndarray, values: np.ndarray) -> bytes:
-    """Vectorized encoder producing the v2 stream-separated format
-    (header flags=1; see module docstring).
-
-    Nonzero value XORs always use the explicit-window lead/sig form
-    (never v1's reuse-previous-window '10' form, whose window state is
-    inherently sequential). ``decode_chunk`` accepts both formats, so
-    blobs from either encoder round-trip. Falls back to the scalar v1
-    encoder on pathological dods.
-    """
-    n = len(ts_us)
-    assert n >= 1
-    fields = _encode_fields(ts_us, values)
-    if fields is None:
-        return encode_chunk(ts_us, values)
-    header = struct.pack("<IqI", n, int(ts_us[0]), 1)
-    return header + _pack_bits(
-        np.concatenate(fields[0]), np.concatenate(fields[1])
-    )
-
-
-def encode_chunks_batch(
-    ts_us: np.ndarray, values: np.ndarray, chunk: int
-) -> list[tuple[int, int, bytes]]:
-    """Encode ONE sorted series as CHUNK-sized blobs — thin wrapper
-    over ``encode_chunks_multi`` with stride-``chunk`` segments.
-    Returns [(chunk_start_us, n, blob), ...]."""
-    n = len(ts_us)
-    starts = np.arange(0, n, chunk, dtype=np.int64)
-    lens = np.minimum(chunk, n - starts)
-    return encode_chunks_multi(
-        np.asarray(ts_us), np.asarray(values), starts, lens
-    )
+def _seg_starts(counts: np.ndarray) -> np.ndarray:
+    """Offset of each segment, for segments of the given lengths laid
+    out consecutively."""
+    return np.r_[0, np.cumsum(counts)[:-1]].astype(np.int64)
 
 
 def _seg_positions(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(segment id, within-segment position) per element, for segments
     of the given lengths laid out consecutively."""
-    counts = counts.astype(np.int64)
-    total = int(counts.sum())
+    counts = np.asarray(counts, dtype=np.int64)
     seg_ids = np.repeat(np.arange(len(counts)), counts)
-    offs = np.r_[0, np.cumsum(counts)[:-1]]
-    within = np.arange(total) - np.repeat(offs, counts)
+    within = np.arange(len(seg_ids)) - np.repeat(_seg_starts(counts), counts)
     return seg_ids, within
+
+
+def _seg_cumsum_exclusive(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Per-segment exclusive prefix sum, vectorized: global cumsum minus
+    the segment-start correction."""
+    g = np.cumsum(vals)
+    starts = _seg_starts(counts)
+    base = np.where(starts > 0, g[starts - 1], 0)
+    return g - vals - np.repeat(base, counts)
 
 
 def _pack_uniform_seg(
     vals: np.ndarray, counts: np.ndarray, width: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Segmented ``_pack_uniform``: pack each segment's uniform-width
-    symbol run into its own word list (bit layout identical to calling
-    ``_pack_uniform`` per segment), all segments in one vector pass.
+    """Pack each segment's run of uniform-width symbols (width divides
+    64) into 64-bit words plus one partial tail word, all segments in
+    one vector pass. The bit layout is identical to feeding the symbols
+    to ``_pack_bits`` one by one; this collapses the per-field packer
+    cost by 64/width on the control streams.
     Returns (word values, word field widths, word segment ids)."""
     per = 64 // width
     seg_ids, within = _seg_positions(counts)
@@ -421,8 +159,7 @@ def _pack_uniform_seg(
     shift = ((m - 1 - slot) * width).astype(np.uint64)
     contrib = vals.astype(np.uint64) << shift
     n_words_seg = (counts + per - 1) // per
-    word_offs = np.r_[0, np.cumsum(n_words_seg)[:-1]]
-    gw = word_offs[seg_ids] + w_in_seg  # non-decreasing (input is seg-ordered)
+    gw = _seg_starts(n_words_seg)[seg_ids] + w_in_seg  # non-decreasing
     words = np.zeros(int(n_words_seg.sum()), dtype=np.uint64)
     if len(gw):
         firsts = np.r_[0, np.flatnonzero(gw[1:] != gw[:-1]) + 1]
@@ -447,17 +184,10 @@ def encode_chunks_multi(
     ``decode_chunks_batch``'s segmented decode), ordered per segment by
     one stable argsort, and bit-packed in a single ``_pack_bits`` call;
     segment byte boundaries come from analytic per-segment bit counts.
-    Byte-identical to per-chunk ``encode_chunk_fast`` (pinned by test) —
-    this is what keeps in-Spark encode throughput at the micro-bench
-    level when a tier has thousands of short keys per Arrow batch
-    (VERDICT r03 #5: per-key encode calls paid ~35 fixed numpy ops per
-    key, 3x the whole budget at 250-point keys).
-
-    Segments with pathological dods (|dod| >= 2^60, where vectorized
-    zigzag could wrap) are re-encoded with the scalar v1 encoder; their
-    vector-path bytes are computed-but-discarded, which is safe because
-    the analytic bit counts use the same (wrapped) class/width arrays,
-    keeping every other segment's byte offsets intact.
+    One call per Arrow batch is what keeps in-Spark encode throughput at
+    the micro-bench level when a tier has thousands of short keys per
+    batch (VERDICT r03 #5: per-key encode calls paid ~35 fixed numpy ops
+    per key, 3x the whole budget at 250-point keys).
 
     Returns [(chunk_start_us, n, blob), ...] in segment order.
     """
@@ -469,10 +199,9 @@ def encode_chunks_multi(
     S = len(seg_start)
     if S == 0:
         return []
-    N = len(t)
-    d_full = np.diff(t) if N > 1 else np.zeros(0, np.int64)
-    dd_full = np.diff(d_full) if N > 2 else np.zeros(0, np.int64)
-    x_full = (b[1:] ^ b[:-1]) if N > 1 else np.zeros(0, np.uint64)
+    d_full = np.diff(t)
+    dd_full = np.diff(d_full)
+    x_full = b[1:] ^ b[:-1]
 
     nd = np.maximum(n_s - 2, 0)
     nx = np.maximum(n_s - 1, 0)
@@ -481,14 +210,23 @@ def encode_chunks_multi(
     xor_seg, xor_within = _seg_positions(nx)
     xor = x_full[seg_start[xor_seg] + xor_within]
 
-    # --- dod class + payload streams (as in _encode_fields) ---------
+    # --- dod class + payload streams ---------------------------------
+    # class 0: dod==0; classes 1-3 by zigzag magnitude — one
+    # searchsorted + table lookups instead of an np.select (select
+    # materializes every choice over the full array)
     z = ((dods << 1) ^ (dods >> 63)).view(np.uint64)
     cls = 1 + np.searchsorted(_DOD_BOUNDS, z, side="right")
     cls[dods == 0] = 0
     pay = np.where(cls == 3, dods.view(np.uint64), z)
     pay_w = _DOD_PAYLOAD_W[cls]
 
-    # --- value XOR lead/sig (same float-log trick as _encode_fields) -
+    # --- value XOR lead/sig ------------------------------------------
+    # trailing zeros exactly: the isolated lowest set bit is a power of
+    # two, exactly representable in float64, so log2 is exact. The
+    # top-bit index comes from log2 of the full value, which float
+    # rounding can put off by one in either direction — two exact
+    # shift-checks pin it (numpy has no clz; an unpacked bit matrix +
+    # argmax measured ~2x the whole encoder's budget).
     nz = xor != 0
     safe = np.where(nz, xor, np.uint64(1))
     lsb = safe & (~safe + np.uint64(1))
@@ -527,7 +265,6 @@ def encode_chunks_multi(
     streams.append(
         (np.zeros(len(pad_sel), np.uint64), pad[pad_sel], pad_sel)
     )
-    byte_len = (nbits + pad) // 8
 
     all_v = np.concatenate([s[0].astype(np.uint64) for s in streams])
     all_w = np.concatenate([s[1] for s in streams]).astype(np.int64)
@@ -538,22 +275,13 @@ def encode_chunks_multi(
     order = np.argsort(all_seg * 8 + all_rank, kind="stable")
     packed = _pack_bits(all_v[order], all_w[order])
 
-    bad = np.zeros(S, dtype=bool)
-    if len(dods):
-        huge = (dods >= (1 << 60)) | (dods <= -(1 << 60))
-        if huge.any():
-            bad[np.unique(dod_seg[huge])] = True
-    offs = np.r_[0, np.cumsum(byte_len)]
     out: list[tuple[int, int, bytes]] = []
-    for i in range(S):
-        lo = int(seg_start[i])
-        n_ = int(n_s[i])
-        st = int(t[lo])
-        if bad[i]:
-            out.append((st, n_, encode_chunk(t[lo : lo + n_], vals_f[lo : lo + n_])))
-        else:
-            header = struct.pack("<IqI", n_, st, 1)
-            out.append((st, n_, header + packed[offs[i] : offs[i + 1]]))
+    lo = 0
+    for st, n_, hi in zip(
+        t[seg_start].tolist(), n_s.tolist(), np.cumsum((nbits + pad) // 8).tolist()
+    ):
+        out.append((st, n_, struct.pack(_HEADER, n_, st, _FORMAT) + packed[lo:hi]))
+        lo = hi
     return out
 
 
@@ -584,115 +312,26 @@ def _stream_words(blob: bytes, offset: int = 16) -> np.ndarray:
     return np.frombuffer(raw + b"\x00" * pad, dtype=">u8").astype(np.uint64)
 
 
-def _decode_chunk_v2(blob: bytes, n: int, t0: int) -> tuple[np.ndarray, np.ndarray]:
-    """Decode the stream-separated v2 layout with ~10 numpy passes:
-    class/control streams have fixed widths (arange offsets), payload
-    widths come from table lookups, offsets from one cumsum each, and
-    the sequential dependencies collapse to ``cumsum`` (delta-of-delta)
-    and ``bitwise_xor.accumulate`` (value XOR chain)."""
-    words = _stream_words(blob)
-    pos = 0
-    ts = np.full(n, t0, dtype=np.int64)
-    if n > 1:
-        first_delta = int(
-            _unpack_fields(
-                words, np.array([0], dtype=np.int64), np.array([64], dtype=np.int64)
-            )[0].astype(np.int64)
-        )
-        pos = 64
-        dods = np.zeros(n - 2, dtype=np.int64)
-        if n > 2:
-            ncls = n - 2
-            cls = _unpack_fields(
-                words,
-                pos + 2 * np.arange(ncls, dtype=np.int64),
-                np.full(ncls, 2, dtype=np.int64),
-            ).astype(np.int64)
-            pos += 2 * ncls
-            pw = _DOD_PAYLOAD_W[cls]
-            pends = pos + np.cumsum(pw)
-            pay = _unpack_fields(words, pends - pw, pw)
-            pos = int(pends[-1]) if ncls else pos
-            unzig = ((pay >> np.uint64(1)) ^ (np.uint64(0) - (pay & np.uint64(1)))).view(
-                np.int64
-            )
-            dods = np.where(cls == 3, pay.view(np.int64), unzig)
-            dods[cls == 0] = 0
-        deltas = np.empty(n - 1, dtype=np.int64)
-        deltas[0] = first_delta
-        if n > 2:
-            deltas[1:] = first_delta + np.cumsum(dods)
-        ts[1:] += np.cumsum(deltas)
-
-    v0 = _unpack_fields(
-        words, np.array([pos], dtype=np.int64), np.array([64], dtype=np.int64)
-    )[0]
-    pos += 64
-    if n == 1:
-        return ts, np.array([v0]).view(np.float64)
-    nb = n - 1
-    ctrl = _unpack_fields(
-        words,
-        pos + np.arange(nb, dtype=np.int64),
-        np.ones(nb, dtype=np.int64),
-    ).astype(bool)
-    pos += nb
-    nnz = int(ctrl.sum())
-    xors = np.zeros(nb, dtype=np.uint64)
-    if nnz:
-        ls = _unpack_fields(
-            words,
-            pos + 11 * np.arange(nnz, dtype=np.int64),
-            np.full(nnz, 11, dtype=np.int64),
-        )
-        pos += 11 * nnz
-        lead = (ls >> np.uint64(6)).astype(np.int64)
-        sig6 = (ls & np.uint64(0x3F)).astype(np.int64)
-        sig = np.where(sig6 == 0, 64, sig6)
-        pends = pos + np.cumsum(sig)
-        pay = _unpack_fields(words, pends - sig, sig)
-        xors[ctrl] = pay << (64 - lead - sig).astype(np.uint64)
-    bits = np.bitwise_xor.accumulate(np.r_[np.array([v0], dtype=np.uint64), xors])
-    return ts, bits.view(np.float64)
-
-
-def _seg_starts_from_counts(counts: np.ndarray) -> np.ndarray:
-    return np.r_[0, np.cumsum(counts)[:-1]]
-
-
-def _seg_arange(counts: np.ndarray) -> np.ndarray:
-    """[0..c0), [0..c1), ... concatenated."""
-    total = int(counts.sum())
-    return np.arange(total) - np.repeat(_seg_starts_from_counts(counts), counts)
-
-
-def _seg_cumsum_exclusive(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Per-segment exclusive prefix sum, vectorized: global cumsum minus
-    the segment-start correction."""
-    g = np.cumsum(vals)
-    starts = _seg_starts_from_counts(counts)
-    base = np.where(starts > 0, g[starts - 1], 0)
-    return g - vals - np.repeat(base, counts)
-
-
 def decode_chunks_batch(
     blobs: list[bytes],
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode MANY blobs in one segmented-vectorized pass; returns
     (ts, values, counts) concatenated in input order.
 
-    The per-chunk ``_decode_chunk_v2`` is ~40 numpy calls regardless of
-    chunk size — fine for 4096-point archive chunks, but tier series
-    with short keys produce small blobs where that fixed cost dominates
-    (measured 0.16M pts/s through Spark on ~250-point blobs). Here all
-    blobs' streams decode together: per-stream field offsets become
+    All blobs' streams decode together: per-stream field offsets become
     segmented aranges/cumsums over the concatenated word buffer, and
     the two sequential chains use a GLOBAL scan plus per-segment
     correction — cumsum minus the segment-start prefix for timestamps,
     ``bitwise_xor.accumulate`` XOR the pre-segment accumulator for
     values (XOR scans are invertible, so the global scan restricted to
     a segment differs from the per-segment scan only by the constant
-    prefix). Legacy v1 blobs fall back to the per-chunk decoder.
+    prefix). A per-blob decode paid ~40 numpy calls of fixed cost per
+    blob, which dominated tiers whose keys are shorter than the chunk
+    size (measured 0.16M pts/s through Spark on ~250-point blobs).
+
+    Raises ``ValueError`` on a blob whose header is not the one wire
+    format (``flags`` other than 1, or a zero point count): blobs come
+    from storage, so a foreign or corrupt one must not decode to noise.
     """
     k = len(blobs)
     if k == 0:
@@ -701,60 +340,46 @@ def decode_chunks_batch(
             np.empty(0, np.float64),
             np.empty(0, np.int64),
         )
-    metas = [struct.unpack_from("<IqI", b, 0) for b in blobs]
-    counts = np.array([m[0] for m in metas], dtype=np.int64)
-    out_ts = np.empty(int(counts.sum()), dtype=np.int64)
-    out_v = np.empty(int(counts.sum()), dtype=np.float64)
-    out_starts = _seg_starts_from_counts(counts)
-
-    v2 = np.array([m[2] == 1 for m in metas])
-    for i in np.flatnonzero(~v2):  # legacy blobs: per-chunk decode
-        t, v = decode_chunk(blobs[i])
-        out_ts[out_starts[i] : out_starts[i] + counts[i]] = t
-        out_v[out_starts[i] : out_starts[i] + counts[i]] = v
-    idx = np.flatnonzero(v2)
-    if not len(idx):
-        return out_ts, out_v, counts
+    metas = [struct.unpack_from(_HEADER, b, 0) for b in blobs]
+    for i, (count, _, flags) in enumerate(metas):
+        if flags != _FORMAT or count == 0:
+            raise ValueError(
+                f"Gorilla blob {i}: header count={count} flags={flags}, "
+                f"expected count >= 1 and flags={_FORMAT}"
+            )
+    n = np.array([m[0] for m in metas], dtype=np.int64)
+    t0 = np.array([m[1] for m in metas], dtype=np.int64)
 
     # concatenated word buffer; each blob keeps its own >=1 guard word
     # (from _stream_words padding), so cross-blob j+1 reads stay inside
     # the owning blob's padded region
-    word_chunks = [_stream_words(blobs[i]) for i in idx]
-    word_base = np.r_[0, np.cumsum([len(w) for w in word_chunks])[:-1]]
+    word_chunks = [_stream_words(b) for b in blobs]
     words = np.concatenate(word_chunks)
-    base_bits = (word_base * 64).astype(np.int64)
-
-    n = counts[idx]
-    t0 = np.array([metas[i][1] for i in idx], dtype=np.int64)
+    pos = _seg_starts(np.array([len(w) for w in word_chunks])) * 64
 
     # --- timestamp streams ------------------------------------------------
     has_fd = n > 1
-    fd = np.zeros(len(idx), dtype=np.int64)
-    if has_fd.any():
-        fd[has_fd] = _unpack_fields(
-            words,
-            base_bits[has_fd],
-            np.full(int(has_fd.sum()), 64, dtype=np.int64),
-        ).astype(np.int64)
-    pos = base_bits + 64 * has_fd  # per-blob cursor after first_delta
+    fd = np.zeros(k, dtype=np.int64)
+    fd[has_fd] = _unpack_fields(
+        words, pos[has_fd], np.full(int(has_fd.sum()), 64, dtype=np.int64)
+    ).view(np.int64)
+    pos = pos + 64 * has_fd  # per-blob cursor after first_delta
 
     ncls = np.maximum(n - 2, 0)
-    total_cls = int(ncls.sum())
-    dods = np.zeros(total_cls, dtype=np.int64)
-    cls_blob = np.repeat(np.arange(len(idx)), ncls)
-    if total_cls:
+    cls_seg, cls_within = _seg_positions(ncls)
+    dods = np.zeros(len(cls_seg), dtype=np.int64)
+    if len(cls_seg):
         cls = _unpack_fields(
             words,
-            pos[cls_blob] + 2 * _seg_arange(ncls),
-            np.full(total_cls, 2, dtype=np.int64),
+            pos[cls_seg] + 2 * cls_within,
+            np.full(len(cls_seg), 2, dtype=np.int64),
         ).astype(np.int64)
         pos = pos + 2 * ncls
         pw = _DOD_PAYLOAD_W[cls]
-        pay_off = _seg_cumsum_exclusive(pw, ncls)
-        pay = _unpack_fields(words, pos[cls_blob] + pay_off, pw)
-        pw_sum = np.zeros(len(idx), dtype=np.int64)
-        np.add.at(pw_sum, cls_blob, pw)
-        pos = pos + pw_sum
+        pay = _unpack_fields(
+            words, pos[cls_seg] + _seg_cumsum_exclusive(pw, ncls), pw
+        )
+        pos = pos + np.bincount(cls_seg, weights=pw, minlength=k).astype(np.int64)
         unzig = (
             (pay >> np.uint64(1)) ^ (np.uint64(0) - (pay & np.uint64(1)))
         ).view(np.int64)
@@ -763,119 +388,51 @@ def decode_chunks_batch(
 
     # deltas per blob = fd + [0, cumsum(dods)]; ts = t0 + [0, cumsum(deltas)]
     nb = np.maximum(n - 1, 0)
-    deltas = np.repeat(fd, nb)
-    if total_cls:
-        # positions of the dod-driven part: within each blob's nb slots,
-        # slots 1.. carry the running dod sum
-        nb_starts = _seg_starts_from_counts(nb)
+    nb_seg, nb_within = _seg_positions(nb)
+    deltas = fd[nb_seg]
+    if len(cls_seg):
+        # within each blob's nb slots, slots 1.. carry the running dod sum
         dod_cum = _seg_cumsum_exclusive(dods, ncls) + dods  # inclusive
-        tgt = np.repeat(nb_starts[ncls > 0], ncls[ncls > 0]) + 1 + _seg_arange(ncls)
-        deltas[tgt] += dod_cum
-    ts_flat = np.repeat(t0, n)
-    if nb.sum():
-        delta_cum = _seg_cumsum_exclusive(deltas, nb) + deltas  # inclusive
-        n_starts = _seg_starts_from_counts(n)
-        tgt = np.repeat(n_starts[nb > 0], nb[nb > 0]) + 1 + _seg_arange(nb)
-        ts_flat[tgt] += delta_cum
+        deltas[_seg_starts(nb)[cls_seg] + 1 + cls_within] += dod_cum
+    n_starts = _seg_starts(n)
+    after_first = n_starts[nb_seg] + 1 + nb_within  # every point but the first
+    ts = np.repeat(t0, n)
+    if len(nb_seg):
+        ts[after_first] += _seg_cumsum_exclusive(deltas, nb) + deltas
 
     # --- value streams ----------------------------------------------------
-    v0 = _unpack_fields(words, pos, np.full(len(idx), 64, dtype=np.int64))
+    v0 = _unpack_fields(words, pos, np.full(k, 64, dtype=np.int64))
     pos = pos + 64
-    nb_blob = np.repeat(np.arange(len(idx)), nb)
-    total_nb = int(nb.sum())
-    xors = np.zeros(total_nb, dtype=np.uint64)
-    if total_nb:
+    xors = np.zeros(len(nb_seg), dtype=np.uint64)
+    if len(nb_seg):
         ctrl = _unpack_fields(
-            words,
-            pos[nb_blob] + _seg_arange(nb),
-            np.ones(total_nb, dtype=np.int64),
+            words, pos[nb_seg] + nb_within, np.ones(len(nb_seg), dtype=np.int64)
         ).astype(bool)
         pos = pos + nb
-        nnz = np.zeros(len(idx), dtype=np.int64)
-        np.add.at(nnz, nb_blob[ctrl], 1)
-        total_nnz = int(nnz.sum())
-        if total_nnz:
-            nz_blob = nb_blob[ctrl]
+        nz_seg = nb_seg[ctrl]
+        if len(nz_seg):
+            nnz = np.bincount(nz_seg, minlength=k)
             ls = _unpack_fields(
                 words,
-                pos[nz_blob] + 11 * _seg_arange(nnz),
-                np.full(total_nnz, 11, dtype=np.int64),
+                pos[nz_seg] + 11 * _seg_positions(nnz)[1],
+                np.full(len(nz_seg), 11, dtype=np.int64),
             )
             pos = pos + 11 * nnz
             lead = (ls >> np.uint64(6)).astype(np.int64)
             sig6 = (ls & np.uint64(0x3F)).astype(np.int64)
             sig = np.where(sig6 == 0, 64, sig6)
-            pay_off = _seg_cumsum_exclusive(sig, nnz)
-            pay = _unpack_fields(words, pos[nz_blob] + pay_off, sig)
+            pay = _unpack_fields(
+                words, pos[nz_seg] + _seg_cumsum_exclusive(sig, nnz), sig
+            )
             xors[ctrl] = pay << (64 - lead - sig).astype(np.uint64)
     # full bit stream per blob: [v0, xors...]; global xor-scan + fixup
-    full = np.empty(int(n.sum()), dtype=np.uint64)
-    n_starts = _seg_starts_from_counts(n)
+    full = np.empty(len(ts), dtype=np.uint64)
     full[n_starts] = v0
-    if total_nb:
-        tgt = np.repeat(n_starts[nb > 0], nb[nb > 0]) + 1 + _seg_arange(nb)
-        full[tgt] = xors
+    full[after_first] = xors
     g = np.bitwise_xor.accumulate(full)
-    fix = np.zeros(len(idx), dtype=np.uint64)
+    fix = np.zeros(k, dtype=np.uint64)
     fix[1:] = g[n_starts[1:] - 1]
-    vals_flat = g ^ np.repeat(fix, n)
-
-    # scatter the v2 segments back into input order
-    v2_out_starts = out_starts[idx]
-    src = 0
-    for b, cnt in enumerate(n):
-        o = v2_out_starts[b]
-        out_ts[o : o + cnt] = ts_flat[src : src + cnt]
-        out_v[o : o + cnt] = vals_flat[src : src + cnt].view(np.float64)
-        src += cnt
-    return out_ts, out_v, counts
-
-
-def decode_chunk(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
-    n, t0, flags = struct.unpack_from("<IqI", blob, 0)
-    if flags == 1:
-        return _decode_chunk_v2(blob, n, t0)
-    r = _BitReader(blob[16:])
-    ts = np.empty(n, dtype=np.int64)
-    ts[0] = t0
-    if n > 1:
-        first_delta = r.read(64)
-        if first_delta >= 1 << 63:
-            first_delta -= 1 << 64
-        ts[1] = t0 + first_delta
-        delta = first_delta
-        for i in range(2, n):
-            c = r.read(1)
-            if c == 0:
-                dod = 0
-            else:
-                if r.read(1) == 0:
-                    dod = _unzigzag(r.read(10))
-                elif r.read(1) == 0:
-                    dod = _unzigzag(r.read(24))
-                elif r.read(1) == 0:
-                    dod = _unzigzag(r.read(40))
-                else:
-                    dod = r.read(64)
-                    if dod >= 1 << 63:
-                        dod -= 1 << 64
-            delta += dod
-            ts[i] = ts[i - 1] + delta
-    vals = np.empty(n, dtype=np.uint64)
-    prev = r.read(64)
-    vals[0] = prev
-    lead, sig = 0, 0
-    for i in range(1, n):
-        if r.read(1) == 0:
-            vals[i] = prev
-        else:
-            if r.read(1) == 1:
-                lead = r.read(5)
-                sig = r.read(6) or 64
-            meaningful = r.read(sig)
-            prev = prev ^ (meaningful << (64 - lead - sig))
-            vals[i] = prev
-    return ts, vals.view(np.float64)
+    return ts, (g ^ np.repeat(fix, n)).view(np.float64), n
 
 
 # --- DataFrame-level API ----------------------------------------------------

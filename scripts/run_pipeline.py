@@ -26,8 +26,7 @@ the reference's admin forms; validation rules identical —
                          "hot_count_threshold": 100000,
                          "accuracy": 10000}],
   "channel": "text_len",
-  "gap_fill": {"enabled": true, "max_gap_slots": 60, "use_sql": false},
-  "fused_rollups": false,
+  "gap_fill": {"enabled": true, "max_gap_slots": 60},
   "compress_tiers": false,
   "retention": {"checked": 604800, "rollup_1min": 2592000,
                  "rollup_1H": 31536000, "rollup_1D": null}
@@ -35,7 +34,9 @@ the reference's admin forms; validation rules identical —
 
 "curve" accepts the reference's comma/tab CSV form verbatim
 (CurvePeriod.parse_curve; set_curve models.py:350-360); "points" as a
-[[x, y], ...] list is accepted too.
+[[x, y], ...] list is accepted too. A key not shown above, at the top
+level or under "gap_fill", is an error that names it: a stale job file
+must not silently run a different configuration.
 """
 
 from __future__ import annotations
@@ -45,6 +46,21 @@ import json
 import sys
 
 from pyspark.sql import SparkSession
+
+JOB_KEYS = frozenset({
+    "source_time_step", "range_check", "rate_of_change",
+    "curve_interpolation", "aggregations", "quantile_rollups", "channel",
+    "gap_fill", "compress_tiers", "retention",
+})
+GAP_FILL_KEYS = frozenset({"enabled", "max_gap_slots"})
+
+
+def _reject_unknown(d: dict, known: frozenset, where: str) -> None:
+    unknown = sorted(set(d) - known)
+    if unknown:
+        raise ValueError(
+            f"unknown key(s) in {where}: {', '.join(map(repr, unknown))}"
+        )
 
 
 def load_config(d: dict):
@@ -61,6 +77,8 @@ def load_config(d: dict):
         RoccThreshold,
     )
 
+    _reject_unknown(d, JOB_KEYS, "job config")
+    _reject_unknown(d.get("gap_fill", {}), GAP_FILL_KEYS, "gap_fill")
     rc = d.get("range_check")
     roc = d.get("rate_of_change")
     ci = d.get("curve_interpolation")
@@ -153,8 +171,6 @@ def main(argv=None) -> int:
         channel=raw.get("channel", "text_len"),
         gap_fill_enabled=bool(gf.get("enabled", True)),
         max_gap_slots=gf.get("max_gap_slots", 60),
-        use_sql_gapfill=bool(gf.get("use_sql", False)),
-        fused_rollups=bool(raw.get("fused_rollups", False)),
         compress_tiers=bool(raw.get("compress_tiers", False)),
     )
     results = pipe.run(transcripts, finalize=args.finalize)

@@ -2,10 +2,11 @@ import datetime as dt
 
 import pytest
 
-from enhydris_autoprocess_spark.operators import gap_fill, gap_fill_sql
+from enhydris_autoprocess_spark.operators import gap_fill
 from enhydris_autoprocess_spark.timeutil import parse_step
 
 from .conftest import assert_values_equal, collect_series, series_df
+from .gapfill_oracle import gap_fill_sql
 
 UTC = dt.timezone.utc
 NAN = float("nan")
@@ -192,7 +193,7 @@ def test_duplicate_slot_election_deterministic_and_variant_identical(spark):
     and differed between the fused path (last-in-shuffle-order wins) and
     the chunked path (all duplicates anchored). Both now elect the same
     winner deterministically — last in (ts, value, flags) order — so the
-    pipeline's hot_key_chunking knob is output-invariant on dirty input
+    pipeline's hot_chunk_span_seconds is output-invariant on dirty input
     too (the config-hash exclusion claim)."""
     import math
 

@@ -10,10 +10,13 @@ import shutil
 import subprocess
 import sys
 
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
     from make_dist import build
 
     zip_path = build(str(tmp_path / "pkg.zip"))
@@ -42,12 +45,10 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
         "aggregations": [
             {"target_time_step": "H", "method": "sum", "max_missing": 100}
         ],
-        # the round-6 declarative surface: quantile tier + fused
-        # rollup mode straight from job JSON
+        # the declarative quantile tier straight from job JSON
         "quantile_rollups": [
             {"target_time_step": "1D", "quantiles": [0.5, 0.9]}
         ],
-        "fused_rollups": True,
         "gap_fill": {"enabled": False},
         "retention": {"rollup_1min": 86400},
     }
@@ -71,7 +72,7 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
             "--conf", "spark.sql.session.timeZone=UTC",
             "--conf", "spark.ui.enabled=false",
             "--py-files", zip_path,
-            os.path.join(repo, "scripts", "run_pipeline.py"),
+            os.path.join(REPO, "scripts", "run_pipeline.py"),
             "--config", cfg_path,
             "--input", in_dir,
             "--root", root,
@@ -98,3 +99,27 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     t1m = TierTable(f"{root}/rollup_1min").read(spark)
     days = {r[0] for r in t1m.selectExpr("to_date(ts)").distinct().collect()}
     assert dt.date(2024, 1, 1) not in days and dt.date(2024, 1, 2) in days
+
+
+@pytest.mark.parametrize(
+    "job, key",
+    [
+        ({"fused_rollups": True}, "fused_rollups"),
+        ({"gap_fill": {"enabled": True, "use_sql": True}}, "use_sql"),
+    ],
+    ids=["top-level", "gap_fill"],
+)
+def test_job_file_with_unknown_key_fails(tmp_path, job, key):
+    """A stale job file must not silently run a different path: an
+    unknown key fails the job, before any Spark work, naming the key."""
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
+    from run_pipeline import main
+
+    cfg_path = tmp_path / "job.json"
+    cfg_path.write_text(json.dumps(job))
+    with pytest.raises(ValueError, match=f"'{key}'"):
+        main([
+            "--config", str(cfg_path),
+            "--input", str(tmp_path / "input"),
+            "--root", str(tmp_path / "tiers"),
+        ])

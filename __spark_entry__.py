@@ -621,8 +621,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing through the REAL decoders (mapInPandas over
     binary payloads -> fixed-dim features): a deterministic seeded
     media table (real PPM/PNG/JPEG images + PCM WAV audio + MJPEG-AVI
-    video, frame-sampled through the JPEG decoder) decoded with
-    fake=False. NOT SQL-expressible (bit-level image/audio/video
+    video, frame-sampled through the JPEG decoder). NOT SQL-expressible (bit-level image/audio/video
     codecs have no DuckDB analog), so this entry intentionally has NO
     oracle_sql() — but it is SELF-ASSERTING (VERDICT r05 next-round
     #3): the seeded table and deterministic decoders make the full
@@ -632,11 +631,6 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes a real correctness signal instead of a row count.
     ``sf_dir`` is unused (the table is synthesized, not read) but kept
     for the uniform signature."""
-    from enhydris_autoprocess_spark.textops.multimodal import (
-        extract_features,
-        fake_media_frame,
-    )
-
     out = _media_features_frame(spark)
     digest = media_features_digest(out.collect())
     if digest != _MEDIA_FEATURES_DIGEST:
@@ -654,7 +648,7 @@ def _media_features_frame(spark: SparkSession) -> DataFrame:
         fake_media_frame,
     )
 
-    feats = extract_features(fake_media_frame(spark, n=36), fake=False)
+    feats = extract_features(fake_media_frame(spark, n=36))
     return feats.select(
         "media_id",
         "kind",

@@ -14,10 +14,11 @@ Design notes (Spark-first, NOT a port):
   curve interpolation (chained CASE piecewise-linear), regularization
   (grid arithmetic + row_number), aggregation (hash agg).
 - pandas/Arrow UDFs are used only where genuinely needed: Gorilla
-  codec (bitstream), and the spec-mandated gap-fill variant.
+  codec (bitstream), and the spec-mandated gap-fill kernel.
 - Scale levers: per-partition HWM checkpoints (incremental scans ==
-  partition pruning), salted/chunked applyInPandas for hot keys,
-  AQE on, broadcast joins for config/checkpoint dims.
+  partition pruning), time chunks with halo copies for hot keys
+  (``skew.halo_chunks``), AQE on, broadcast joins for
+  config/checkpoint dims.
 
 Semantics provenance: reference behaviors are pinned by the golden
 vectors in ``/root/reference/enhydris_autoprocess/tests/test_models.py``

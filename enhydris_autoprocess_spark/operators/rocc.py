@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..config import RateOfChangeConfig
 from ..flags import append_flag, has_flag
 from ..schema import NAN, ts_seconds
+from ..skew import halo_chunks
 from ..timeutil import parse_delta_t_seconds
 
 
@@ -53,13 +54,13 @@ def rate_of_change_check(
     10^12 turns is a straggler task. Because the check only looks BACK
     at most max(delta_t), each key's timeline can split into fixed
     time chunks where rows in the last max(delta_t) seconds of a chunk
-    are also copied into the next one as lookback context (lookback-
-    only halo — no lookahead copies needed); the window then partitions
-    by (key, chunk) and halo copies drop from the output. Output is
-    identical to the unchunked path (pinned by test), cost is one
-    duplicated halo fraction, and the hot key's work spreads over
-    span-sized tasks — the same trick as skew.chunked_apply_in_pandas,
-    expressed entirely in JVM window frames.
+    are also copied into the next one as lookback context
+    (``skew.halo_chunks`` with a lookback-only halo — no lookahead
+    copies needed); the window then partitions by (key, chunk) and halo
+    copies drop from the output. Output is identical to the unchunked
+    path (pinned by test), cost is one duplicated halo fraction, and
+    the hot key's work spreads over span-sized tasks, entirely in JVM
+    window frames. Must exceed max(delta_t).
     """
     value = F.col(value_col)
     present = value.isNotNull() & ~F.isnan(value)
@@ -77,27 +78,7 @@ def rate_of_change_check(
     )
     part_cols = [key_col]
     if chunk_span_seconds is not None:
-        if chunk_span_seconds <= max_dt:
-            raise ValueError("chunk span must exceed the longest delta_t")
-
-        def _chunk_id(sec):
-            span = F.lit(chunk_span_seconds)
-            return ((sec - F.pmod(sec, span)) / span).cast("long")
-
-        out = (
-            out.withColumn("__home", _chunk_id(F.col("__t")))
-            .withColumn(
-                "__chunk",
-                F.explode(
-                    F.array_distinct(
-                        F.array(
-                            F.col("__home"),
-                            _chunk_id(F.col("__t") + F.lit(max_dt)),
-                        )
-                    )
-                ),
-            )
-        )
+        out = halo_chunks(out, F.col("__t"), chunk_span_seconds, back=max_dt)
         part_cols = [key_col, "__chunk"]
 
     mask = F.lit(False)

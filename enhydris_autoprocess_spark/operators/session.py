@@ -10,13 +10,18 @@ hash aggregation per (key, session). Both steps share a single
 exchange on the key; the aggregation's map-side combine absorbs hot
 keys, so the only skew-sensitive stage is the window sort — the same
 profile as the rate-of-change check, and ``chunk_span_seconds``
-applies the same lookback-halo time-chunking (rocc.py): rows in the
-last ``gap`` of each chunk are copied into the next chunk as context,
-the window partitions by (key, chunk), and the per-key session
-ordinal is reassembled as per-chunk-start-count prefix + within-chunk
-cumulative sum — a session crossing chunk boundaries contributes its
-start to exactly one chunk, so every fragment lands on the same
-global ordinal and the final (key, session) aggregation merges them.
+applies the same lookback-halo time-chunking (``skew.halo_chunks``, as
+rocc.py does): rows in the last ``gap`` of each chunk are copied into
+the next chunk as context, the window partitions by (key, chunk), and
+the per-key session ordinal is reassembled as per-chunk-start-count
+prefix + within-chunk cumulative sum — a session crossing chunk
+boundaries contributes its start to exactly one chunk, so every
+fragment lands on the same global ordinal and the final (key, session)
+aggregation merges them.
+
+``sessionize_native`` is the batch twin of the streaming operator
+(streaming/session_stream.py): the same sessions from Spark's
+``session_window``, without the ordinal.
 
 Duplicate timestamps are safe: a zero gap is never a session break,
 and the running sum gives equal-ts rows the same session id in any
@@ -29,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..schema import ts_micros
+from ..skew import halo_chunks
 
 
 def sessionize(
@@ -100,32 +106,15 @@ def _sessionize_chunked(
     ts_col: str,
     value_col: str,
 ) -> DataFrame:
-    if span_us <= gap_us:
-        raise ValueError("chunk span must exceed the session gap")
-    us = ts_micros(F.col(ts_col))
-
-    # exact integer chunk ids (see skew.chunked_apply_in_pandas: a
-    # double quotient at epoch-micros magnitude can round across an
-    # integer boundary)
-    def _chunk_id(micros):
-        span = F.lit(span_us)
-        return ((micros - F.pmod(micros, span)) / span).cast("long")
-
-    base = df.withColumn("__us", us).withColumn("__home", _chunk_id(F.col("__us")))
     # lookback halo: rows within gap of a chunk's end also copy into
     # the next chunk, so the next chunk's first row sees its true
     # previous event; any previous event farther back than the halo is
     # farther than the gap, i.e. a session break either way
-    copies = base.withColumn(
-        "__chunk",
-        F.explode(
-            F.array_distinct(
-                F.array(
-                    F.col("__home"),
-                    _chunk_id(F.col("__us") + F.lit(gap_us)),
-                )
-            )
-        ),
+    copies = halo_chunks(
+        df.withColumn("__us", ts_micros(F.col(ts_col))),
+        F.col("__us"),
+        span_us,
+        back=gap_us,
     )
     w = Window.partitionBy(key_col, "__chunk").orderBy("__us")
     prev = F.lag("__us").over(w)

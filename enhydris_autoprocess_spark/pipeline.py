@@ -54,11 +54,12 @@ Rollups cascade: each coarse tier (1H, 1D) is rebuilt from the finer
 composition of coarse aggregates from finer ones.
 
 Skew: aggregations are partial+final (map-side combine absorbs hot
-conv_ids); the per-key serial stages — rocc's window sort and pandas
-gap-fill — are time-chunked for hot conversations
-(``hot_chunk_span_seconds``: rocc always chunks via JVM halo windows,
-gap-fill routes keys spanning more than one chunk to the chunked
-variant — see operators/rocc.py and gap_fill_auto).
+conv_ids); the per-key serial stages — rocc's window sort and the
+gap-fill kernel — are time-chunked for hot conversations
+(``hot_chunk_span_seconds``, with ``skew.halo_chunks``): rocc always
+chunks its JVM window; gap-fill runs keys spanning more than one chunk
+as (key, chunk) groups of its one kernel, and every other key as one
+group — see operators/rocc.py and gap_fill_auto.
 """
 
 from __future__ import annotations
@@ -72,7 +73,7 @@ from pyspark.sql import functions as F
 
 from .cache import release_caches
 from .config import PipelineConfig
-from .operators import aggregate, gap_fill, regularize, run_checks
+from .operators import aggregate, regularize, run_checks
 from .operators.gapfill import gap_fill_auto
 from .rollup import rollup_tier, rollup_transcripts
 from .schema import transcripts_to_series
@@ -123,15 +124,16 @@ class Pipeline:
         hot_chunk_span_seconds: int = 7 * 86400,
     ):
         """``hot_chunk_span_seconds``: the two per-key serial stages —
-        the rate-of-change window sort and the pandas gap-fill — split
+        the rate-of-change window sort and the gap-fill kernel — split
         hot conversations into time chunks of this span, so one
         conversation holding 1% of 10^12 turns is span/chunk parallel
         tasks, not one straggler. rocc always chunks (JVM window
-        frames, ~free); gap-fill routes only keys spanning more than
-        one chunk to the chunked variant (per-group pandas overhead
-        would ruin the common case — see gap_fill_auto). Output does
-        not depend on the span — including on dirty input with
-        duplicate (key, ts) rows, where both gap-fill variants elect
+        frames, ~free); gap-fill chunks only keys spanning more than
+        one chunk (chunking costs a Spark-side grid join and halo
+        copies the common case need not pay — see gap_fill_auto), and
+        only when a chunk is wider than its ``max_gap_slots + 1`` halo.
+        Output does not depend on the span — including on dirty input
+        with off-grid or duplicate (key, ts) rows, where chunks elect
         the same slot winner via the (ts, value, flags) tie-break
         (pinned by tests) — so it is excluded from the config hash and
         changing it does not invalidate checkpoints.
@@ -249,21 +251,12 @@ class Pipeline:
             narrow = checked.select(
                 "key", "ts", "value", "flags", "conv_id", "turn_idx"
             )
-            hot_span_slots = self.hot_chunk_span_seconds * MICROS // step.micros
-            if (
-                self.max_gap_slots is not None
-                and hot_span_slots > self.max_gap_slots + 1
-            ):
-                checked = gap_fill_auto(
-                    narrow,
-                    step,
-                    max_gap_slots=self.max_gap_slots,
-                    hot_span_slots=hot_span_slots,
-                )
-            else:
-                checked = gap_fill(
-                    narrow, step, max_gap_slots=self.max_gap_slots
-                )
+            checked = gap_fill_auto(
+                narrow,
+                step,
+                max_gap_slots=self.max_gap_slots,
+                hot_span_slots=self.hot_chunk_span_seconds * MICROS // step.micros,
+            )
         # HWM from the turns themselves (inserted grid rows carry a NULL
         # conv_id): every source turn passes through with its conv_id
         # and ts, so this equals the source slice's per-bucket max

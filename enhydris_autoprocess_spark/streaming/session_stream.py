@@ -8,9 +8,9 @@ store knows how to merge incrementally: each micro-batch's partial
 sessions merge with the stored ones (two fragments of one session
 arriving in different batches coalesce in state), and a session is
 emitted in append mode once the event-time watermark passes its close
-(last event + gap). So the streaming tier is the SAME logical query as
-the batch operator — groupBy(key, session_window) + min/max/count/sum
-— run over ``readStream`` with ``withWatermark``.
+(last event + gap). So the streaming tier IS the batch operator —
+``sessionize_native``'s groupBy(key, session_window) + min/max/count/
+sum — called on a ``readStream`` frame with ``withWatermark``.
 
 Semantics vs batch, stated like rollup_stream.py does: late events
 beyond the watermark delay are dropped (batch re-opens via HWM
@@ -29,7 +29,8 @@ store, no per-row Python anywhere.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..operators.session import sessionize_native
 
 
 def streaming_sessionize(
@@ -42,21 +43,16 @@ def streaming_sessionize(
 ) -> DataFrame:
     """(key, ts, value) stream -> closed sessions, one row each.
 
-    Output matches ``operators.sessionize_native``: key,
+    ``operators.sessionize_native`` over the watermarked stream: key,
     session_start, session_end (min/max event time — NOT the padded
     window end, which includes the gap), n_events, value_sum.
     """
-    win = F.session_window(F.col(ts_col), f"{gap_seconds} seconds")
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key_col), win.alias("__w"))
-        .agg(
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(value_col).alias("value_sum"),
-        )
-        .drop("__w")
+    return sessionize_native(
+        stream.withWatermark(ts_col, watermark),
+        gap_seconds,
+        key_col,
+        ts_col,
+        value_col,
     )
 
 

@@ -79,76 +79,23 @@ def minhash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     ]
 
 
-def base_hashes(text: Column, shingle_k: int = 3) -> Column:
-    """Per-document shingle hash array — materialize this as a column
-    BEFORE computing permutations, so the shingle/regex/hash subtree
-    runs once per row. (64 independent ``array_min(transform(...))``
-    columns over the raw text made Catalyst re-evaluate that subtree
-    per permutation — measured ~60x slowdown.)"""
-    return F.transform(
-        _shingles(text, shingle_k),
-        lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)),
-    )
-
-
-def minhash_from_hashes(
-    hashes: Column, num_hashes: int = 64, seed: int = 1
-) -> Column:
-    """MinHash signature array<long> from a materialized hash array:
-    sig[j] = min over shingles of (a_j*h + b_j) mod p.
-
-    Arrow-vectorized pandas UDF with a numpy (shingles x perms) outer
-    product per document. Spark's higher-order ``transform`` lambdas
-    are interpreted per element (~2us each — a pure-column variant
-    measured 25s for 500 docs x 64 perms); the numpy kernel does the
-    same 10M ops in ~30ms. All values stay < 2^62, inside int64.
-    """
-    params = minhash_params(num_hashes, seed)
-    a = np.array([p[0] for p in params], dtype=np.int64)
-    b = np.array([p[1] for p in params], dtype=np.int64)
-    empty = np.zeros(num_hashes, dtype=np.int64)  # no shingles -> sig of 0s
-
-    @pandas_udf("array<long>")
-    def mh(col: pd.Series) -> pd.Series:
-        out = []
-        for h in col:
-            if h is None or len(h) == 0:
-                out.append(empty)
-                continue
-            hv = np.asarray(h, dtype=np.int64)
-            sig = ((hv[:, None] * a[None, :] + b[None, :]) % _MERSENNE).min(axis=0)
-            out.append(sig)
-        return pd.Series(out)
-
-    return mh(hashes)
-
-
-def minhash_signature(
-    text: Column, num_hashes: int = 64, shingle_k: int = 3, seed: int = 1
-) -> Column:
-    """Convenience composition; prefer the two-step (base_hashes as a
-    real column, then minhash_from_hashes) inside queries."""
-    return minhash_from_hashes(base_hashes(text, shingle_k), num_hashes, seed)
-
-
 def minhash_signature_fast(
     text: Column, num_hashes: int = 64, shingle_k: int = 3, seed: int = 1
 ) -> Column:
     """One-UDF minhash: normalized split stays JVM/codegen; everything
     per-element moves into a single Arrow batch kernel.
 
-    ``base_hashes``'s higher-order lambdas (slice/array_join/xxhash64
-    per shingle) are interpreted ~2µs/element — several seconds per
+    Spark's higher-order lambdas (slice/array_join/xxhash64 per
+    shingle) are interpreted ~2µs/element — several seconds per
     million shingles. Here word hashing is one vectorized
     ``pd.util.hash_array`` over the batch's flattened words
     (deterministic SipHash-style, fixed key), shingle hashes are a
     rolling polynomial combine of k consecutive word hashes (numpy,
-    no string materialization), and the (shingles × perms) min is the
-    same outer-product kernel as before. MinHash needs SET semantics
-    but min over a multiset equals min over its set, so no distinct
-    pass is needed. Signature VALUES differ from
-    ``minhash_signature`` (different shingle hash function); Jaccard
-    estimates are equivalent.
+    no string materialization), and the signature is the (shingles ×
+    perms) outer-product min: sig[j] = min over shingles of
+    (a_j*h + b_j) mod p, all values < 2^62, inside int64. MinHash
+    needs SET semantics but min over a multiset equals min over its
+    set, so no distinct pass is needed.
     """
     params = minhash_params(num_hashes, seed)
     a = np.array([p[0] for p in params], dtype=np.int64)

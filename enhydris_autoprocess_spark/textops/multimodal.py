@@ -18,12 +18,8 @@ Four dependency-free REAL decoders are built in (stdlib + numpy only):
   JPEG decoder per sampled frame.
 
 Formats that genuinely need codec libraries (MP3/AAC, inter-coded
-video such as H.26x/VP9/AV1) stay
-STUBBED behind NotImplementedError unless ``fake=True``, in which
-case a deterministic fake decoder (seeded from the bytes) produces
-stable features so the Spark-side plumbing — schema, partitioning, UDF
-signature, Arrow batch shape — is real and tested end-to-end
-regardless of available codecs.
+video such as H.26x/VP9/AV1) raise NotImplementedError: there is no
+stand-in decoder, so every feature row comes from decoded media.
 """
 
 from __future__ import annotations
@@ -56,14 +52,6 @@ FEATURE_SCHEMA = (
 )
 
 FEATURE_DIM = 8
-
-
-def _fake_decode(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Deterministic stand-in for a real decoder: features derived
-    from a cryptographic digest of the payload."""
-    digest = hashlib.sha256(payload).digest()
-    raw = np.frombuffer((digest * ((dim * 4) // len(digest) + 1))[: dim * 4], "<u4")
-    return (raw.astype(np.float64) / 2**32).astype(np.float32)
 
 
 # --- real decoders (numpy-only) ----------------------------------------------
@@ -541,7 +529,7 @@ def video_features(
 
 
 def decode_video(
-    payload: bytes, fake: bool = False, frame_stride: int = 10
+    payload: bytes, frame_stride: int = 10
 ) -> tuple[np.ndarray, int]:
     """Video payload -> ``(feature vector, frames_sampled)``. The real
     path decodes MJPEG AVI, sampling one frame every ``frame_stride``
@@ -550,8 +538,6 @@ def decode_video(
     this container)."""
     from .jpeg import decode_jpeg
 
-    if fake:
-        return _fake_decode(payload), 1
     if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
         fps, total, frames = decode_avi(payload)
         step = max(1, int(round(fps * frame_stride)))
@@ -560,8 +546,8 @@ def decode_video(
             picks
         )
     raise NotImplementedError(
-        "real decode of non-MJPEG-AVI video requires ffmpeg/cv2 (not "
-        "installed in this container); pass fake=True for the stub"
+        "only MJPEG AVI video is decoded; other video needs a codec "
+        "library such as ffmpeg/cv2"
     )
 
 
@@ -607,12 +593,10 @@ def audio_features(rate: int, samples: np.ndarray) -> np.ndarray:
     )
 
 
-def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
+def decode_image(payload: bytes) -> np.ndarray:
     """Image payload -> feature vector. Real paths decode binary PPM,
     8-bit PNG, and baseline JPEG (all dependency-free); WebP/AVIF/...
     still need codec libraries (not in this container)."""
-    if fake:
-        return _fake_decode(payload)
     if payload[:2] == b"P6":
         return image_features(decode_ppm(payload))
     if payload[:8] == PNG_SIG:
@@ -622,35 +606,29 @@ def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
 
         return image_features(decode_jpeg(payload))
     raise NotImplementedError(
-        "real decode of non-PPM/PNG/JPEG images requires PIL/cv2 (not "
-        "installed in this container); pass fake=True for the "
-        "deterministic stub"
+        "only PPM/PNG/baseline-JPEG images are decoded; other images "
+        "need a codec library such as PIL/cv2"
     )
 
 
-def decode_audio(payload: bytes, fake: bool = False) -> np.ndarray:
+def decode_audio(payload: bytes) -> np.ndarray:
     """Audio payload -> feature vector. Real path decodes RIFF WAV —
     integer/float PCM plus the COMPRESSED in-container codecs with
     fully-specified tables (G.711 A-law / mu-law, IMA ADPCM).
     Perceptual codecs (MP3/AAC) need codec libraries: their synthesis
     filterbank prototype is a 512-entry tabulated constant that cannot
     be faithfully reproduced without the spec tables."""
-    if fake:
-        return _fake_decode(payload)
     if payload[:4] == b"RIFF":
         return audio_features(*decode_wav(payload))
     raise NotImplementedError(
-        "real decode of non-RIFF audio (MP3/AAC/...) requires codec "
-        "libraries (not installed in this container); pass fake=True "
-        "for the stub"
+        "only RIFF WAV audio is decoded; MP3/AAC/... need a codec "
+        "library"
     )
 
 
 def extract_features(
     media: DataFrame,
-    fake: bool = True,
     frame_stride: int = 10,
-    batch_hint: int = 256,
 ) -> DataFrame:
     """binary payloads -> fixed-dim features via mapInPandas.
 
@@ -664,22 +642,16 @@ def extract_features(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             out = []
-            for media_id, kind, duration_ms, payload in zip(
-                b["media_id"], b["kind"], b["duration_ms"], b["payload"]
+            for media_id, kind, payload in zip(
+                b["media_id"], b["kind"], b["payload"]
             ):
                 payload = bytes(payload) if payload is not None else b""
                 if kind == "audio":
-                    feat, frames = decode_audio(payload, fake=fake), 1
+                    feat, frames = decode_audio(payload), 1
                 elif kind == "video":
-                    feat, frames = decode_video(
-                        payload, fake=fake, frame_stride=frame_stride
-                    )
-                    if fake:  # stub has no frames; estimate from metadata
-                        frames = max(
-                            1, int(duration_ms or 0) // (frame_stride * 1000)
-                        )
+                    feat, frames = decode_video(payload, frame_stride)
                 else:
-                    feat, frames = decode_image(payload, fake=fake), 1
+                    feat, frames = decode_image(payload), 1
                 out.append(
                     (
                         media_id,
@@ -894,7 +866,7 @@ def fake_media_frame(spark, n: int = 32, seed: int = 5) -> DataFrame:
     """Deterministic synthetic media table for tests: images are REAL
     tiny PPMs, PNGs, and baseline JPEGs (rotating, with rotating PNG
     filter types / JPEG subsampling), audio is REAL PCM WAV, and video
-    is REAL MJPEG AVI (all decodable with fake=False)."""
+    is REAL MJPEG AVI (all decodable)."""
     from .jpeg import encode_jpeg
 
     rng = np.random.RandomState(seed)

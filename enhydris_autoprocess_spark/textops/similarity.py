@@ -1,9 +1,9 @@
 """Similarity search over an embedding column (array<float>).
 
-- brute_force_cosine_topk: the exact baseline — broadcast the (small)
-  query set against the corpus, dot/norms via zip_with + aggregate
-  (JVM-side, no Python), window top-k. At 100 TB the corpus side
-  stays partitioned and only queries broadcast.
+- brute_force_cosine_topk: the exact baseline — the (small) query set
+  is collected to the driver and every corpus batch is scored against
+  it in one mapInPandas einsum kernel, window top-k. At 100 TB the
+  corpus side stays partitioned and only queries ship.
 - lsh_cosine_topk: the scale path — random-hyperplane (sign) LSH:
   b-bit signatures per band, candidates = bucket collisions, exact
   re-scoring on candidates only. Signatures come from ONE Arrow-batched
@@ -31,26 +31,6 @@ def _round6(c: Column) -> Column:
     .5e-6 boundaries). Ranking happens AFTER rounding, so the rounding
     function must match the oracle's or top-k tie-breaks diverge."""
     return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def cosine_fast(a: Column, b: Column) -> Column:

@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from enhydris_autoprocess_spark.flags import append_flag
-from enhydris_autoprocess_spark.operators.gapfill import complete_grid
+from enhydris_autoprocess_spark.operators.gapfill import ANCHOR, complete_grid
 from enhydris_autoprocess_spark.schema import ts_micros
 from enhydris_autoprocess_spark.timeutil import Step
 
@@ -23,22 +23,21 @@ def gap_fill_sql(
     ts_col: str = "ts",
     value_col: str = "value",
     flags_col: str = "flags",
-    keep_offgrid: bool = True,
 ) -> DataFrame:
     """``gap_fill``'s semantics, anchors via last(ignorenulls) windows.
 
-    With ``keep_offgrid``, off-grid source rows survive the grid join
-    (full outer) and pass through unchanged; like ``gap_fill`` they
-    are excluded from the interpolation anchors (and from being
-    filled), so both agree on which rows anchor. Duplicate (key, ts)
+    Off-grid source rows survive the grid join (full outer) and pass
+    through unchanged; like ``gap_fill`` they are excluded from the
+    interpolation anchors (and from being filled), so both agree on
+    which rows anchor. The off-grid test is this oracle's own per-key
+    window, not ``complete_grid``'s anchor column. Duplicate (key, ts)
     grid rows each survive as their own row here (the grid row joins
     every duplicate), where ``gap_fill`` elects one slot winner — same
     row multiset, different slot election.
     """
     completed = complete_grid(
-        df, step, key_col, ts_col, value_col, flags_col,
-        keep_offgrid=keep_offgrid,
-    )
+        df, step, key_col, ts_col, value_col, flags_col
+    ).drop(ANCHOR)
     us = ts_micros(F.col(ts_col))
     v = F.col(value_col)
     # off-grid = not on the per-key min-anchored grid (the grid is

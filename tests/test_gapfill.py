@@ -84,8 +84,9 @@ def test_impls_agree_on_random_series(spark):
 
 
 def test_chunked_equals_unchunked(spark):
-    """Hot-key chunked gap-fill (skew.chunked_apply_in_pandas with halo)
-    must produce exactly the plain per-key result."""
+    """Hot-key chunked gap-fill ((key, chunk) kernel groups with a halo
+    from skew.halo_chunks) must produce exactly the plain per-key
+    result."""
     import numpy as np
 
     rng = np.random.RandomState(7)
@@ -157,7 +158,7 @@ def test_chunked_matches_sql_on_offgrid_input(spark):
 
 def test_gap_fill_auto_routes_hot_keys(spark):
     """gap_fill_auto must produce exactly the plain result while
-    routing only the long-span key through the chunked variant."""
+    routing only the long-span key through the chunked mode."""
     import math
 
     import numpy as np
@@ -291,3 +292,130 @@ def test_offgrid_and_duplicate_rows_are_preserved(spark, impl):
     dup_ts = T0.replace(tzinfo=None) + dt.timedelta(minutes=3)
     assert sorted(r.value for r in by_ts[dup_ts]) == [40.0, 41.0]
     assert sorted(r.flags for r in by_ts[dup_ts]) == ["", "D"]
+
+
+def _canon(rows):
+    """Rows as sortable tuples, NaN/NULL values as one token, so two
+    results compare row for row, NaN-equal."""
+    import math
+
+    def v(x):
+        return ("nan",) if x is None or math.isnan(x) else ("v", x)
+
+    return sorted(
+        (r.key, r.ts, r.flags, v(r.value), r.turn_idx) for r in rows
+    )
+
+
+def _slot_losers(rows):
+    """Split input rows into slot holders and the duplicate (key, ts)
+    rows that lose the slot: all but the last in (value, flags) order,
+    NULL read as NaN and NaN sorting after every number, as Spark
+    sorts. Losers pass through the engine unchanged."""
+    import math
+
+    by = {}
+    for r in rows:
+        by.setdefault((r[0], r[1]), []).append(r)
+
+    def order(r):
+        missing = r[2] is None or math.isnan(r[2])
+        return (missing, 0.0 if missing else r[2], r[3] or "")
+
+    keep, losers = [], []
+    for group in by.values():
+        group = sorted(group, key=order)
+        keep.append(group[-1])
+        losers.extend(group[:-1])
+    return keep, losers
+
+
+def _assert_chunked_plain_oracle(spark, rows, max_gap_slots, span_slots):
+    """chunked == plain on ``rows``; and both equal the SQL oracle run
+    on the slot holders plus the slot losers passed through unchanged
+    (the oracle anchors on every duplicate; the engine elects one)."""
+    from pyspark.sql import Row
+
+    schema = "key string, ts timestamp, value double, flags string, turn_idx int"
+    df = spark.createDataFrame(rows, schema)
+    step = parse_step("1min")
+    plain = _canon(gap_fill(df, step, max_gap_slots=max_gap_slots).collect())
+    chunked = _canon(
+        gap_fill(
+            df, step, max_gap_slots=max_gap_slots, chunk_span_slots=span_slots
+        ).collect()
+    )
+    assert chunked == plain
+    keep, losers = _slot_losers(rows)
+    oracle = gap_fill_sql(
+        spark.createDataFrame(keep, schema), step, max_gap_slots=max_gap_slots
+    ).collect()
+    passed = [
+        Row(key=k, ts=t, flags=f or "", value=NAN if v is None else v, turn_idx=i)
+        for k, t, v, f, i in losers
+    ]
+    assert _canon(oracle + passed) == plain
+
+
+def test_chunked_idle_gap_key(spark):
+    """A hot key anchored off the chunk grid (+17 s) whose timeline has
+    chunks without a source row, a gap longer than the halo across a
+    chunk edge, a fillable gap across another edge, off-grid rows in
+    both halos and a NULL duplicate whose election is visible: chunked,
+    plain and the oracle agree."""
+    t = T0.replace(tzinfo=None) + dt.timedelta(seconds=17)
+
+    def at(minutes, value, flags="", seconds=0):
+        ts = t + dt.timedelta(minutes=minutes, seconds=seconds)
+        return ("idle", ts, value, flags, minutes)
+
+    rows = [
+        at(0, 1.0), at(1, NAN), at(2, 3.0), at(5, 6.0), at(6, NAN),
+        # off-grid row first in the 10-min chunk's lookback halo (from
+        # 6:00): that chunk's grid must come from the key's anchor
+        at(6, 30.0, "OFF", seconds=-12),
+        # fillable 3-slot gap (9, 10 missing) across the 10-min edge,
+        # off-grid rows in the lookback and lookahead halos
+        at(8, 9.0), at(9, NAN), at(9, 50.0, "OFF", seconds=23),
+        at(11, 12.0), at(10, 70.0, "OFF", seconds=-12),
+        # 7-slot gap (> halo) across the 20-min edge: stays NaN
+        at(16, 17.0), at(18, NAN), at(23, 24.0),
+        # idle: no source row in the 30- and 40-min chunks
+        # NULL duplicate at 52: the NULL row wins the slot, so 53 is
+        # not filled from the 5.0 loser
+        at(52, 5.0), at(52, None, "Z"), at(53, NAN), at(54, 8.0),
+        at(55, NAN), at(56, 9.0),
+        # the key's last row is off its grid
+        at(56, 1.5, "OFF", seconds=30),
+        # a cold key in the same input, on the epoch-minute grid
+        ("cold", T0.replace(tzinfo=None), 1.0, "", 0),
+        ("cold", T0.replace(tzinfo=None) + dt.timedelta(minutes=3), 4.0, "", 3),
+    ]
+    _assert_chunked_plain_oracle(spark, rows, max_gap_slots=3, span_slots=10)
+
+
+@pytest.mark.parametrize("seed", [11, 12, 13])
+def test_chunked_equals_plain_and_oracle_seeded(spark, seed):
+    """Seeded random hot keys: random max_gap_slots and chunk span,
+    per-key off-epoch anchors, NaN and NULL values, off-grid stragglers
+    and duplicate slots."""
+    import numpy as np
+
+    rng = np.random.RandomState(seed)
+    max_gap = int(rng.randint(1, 7))
+    span = int(rng.randint(max_gap + 2, 40))
+    rows = []
+    for k in range(3):
+        t0 = T0.replace(tzinfo=None) + dt.timedelta(seconds=int(rng.randint(60)))
+        n = int(rng.randint(20, 120))
+        for m in sorted(rng.choice(n * 2, size=n, replace=False).tolist()):
+            u = rng.rand()
+            v = None if u < 0.05 else NAN if u < 0.25 else float(rng.rand() * 50)
+            ts = t0 + dt.timedelta(minutes=m)
+            rows.append((f"k{k}", ts, v, "", m))
+            if rng.rand() < 0.08:  # duplicate slot
+                rows.append((f"k{k}", ts, float(rng.rand() * 50), "D", m))
+            if rng.rand() < 0.08:  # off-grid straggler
+                off = dt.timedelta(seconds=int(rng.randint(1, 60)))
+                rows.append((f"k{k}", ts + off, 999.0, "OFF", m))
+    _assert_chunked_plain_oracle(spark, rows, max_gap, span)

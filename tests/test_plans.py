@@ -93,6 +93,21 @@ def test_gapfill_single_exchange_no_join(spark):
     assert p.count("Exchange") == 1
 
 
+def test_chunked_gapfill_runs_the_one_kernel(spark):
+    """Hot-key gap-fill runs the cold path's kernel: exactly one
+    mapInPandas over (key, chunk) groups and no per-group
+    applyInPandas."""
+    t0 = dt.datetime(2024, 1, 1, tzinfo=UTC).replace(tzinfo=None)
+    rows = [("k", t0 + dt.timedelta(minutes=i), float(i), "") for i in range(0, 90, 2)]
+    df = spark.createDataFrame(
+        rows, "key string, ts timestamp, value double, flags string"
+    )
+    out = gap_fill(df, parse_step("1min"), max_gap_slots=3, chunk_span_slots=20)
+    p = _plan(out)
+    assert p.count("MapInPandas") == 1
+    assert "FlatMapGroupsInPandas" not in p
+
+
 def test_parquet_filter_pushdown_reaches_scan(spark, tmp_path):
     """Predicate + projection pushdown: a filtered two-column read of a
     wide parquet table must show PushedFilters and a pruned ReadSchema

@@ -311,14 +311,14 @@ class Pipeline:
             from .storage.gorilla import compress_series
 
             t1 = time.time()
-            snap = self.table(stage).current_snapshot()
-            slice_df = self.spark.read.parquet(snap.data_dir)
+            sid = res.snapshot_id
+            slice_df = self.table(stage).read(self.spark, after_snapshot=sid - 1)
             comp = compress_series(slice_df, flags_col="flags")
             self.table(f"{stage}_gorilla").append(
                 comp,
                 properties={
                     "source": stage,
-                    "source_snapshot": snap.snapshot_id,
+                    "source_snapshot": sid,
                     "seconds": round(time.time() - t1, 3),
                 },
             )

@@ -9,7 +9,9 @@ HWM is itself a big table, so the checkpoint key here is the
 advances one HWM per (stage, bucket) and records lineage (source
 snapshot -> target snapshot) and throughput metrics alongside.
 
-The store is a small JSON document (atomic replace). It is broadcast
+The store is a small JSON document, saved through the tier tables'
+one atomic write (``tier_table.write_atomic``: temp file + rename), so
+a crash leaves the old HWMs or the new ones. It is broadcast
 into the scan filter as literals via a tiny in-memory DataFrame join,
 so the incremental read becomes
 ``WHERE ts > hwm(bucket)`` — Catalyst pushes the conjunctive ts bound
@@ -24,12 +26,12 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import ts_micros
+from .tier_table import write_atomic
 
 DEFAULT_BUCKETS = 64
 
@@ -52,10 +54,7 @@ class CheckpointStore:
 
     def _save(self) -> None:
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(self._state, f, indent=1)
-        os.replace(tmp, self.path)
+        write_atomic(self.path, json.dumps(self._state, indent=1))
 
     # --- HWMs ---------------------------------------------------------
 

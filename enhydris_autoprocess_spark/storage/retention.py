@@ -17,11 +17,17 @@ Row-level deletes never happen — a day that contains any retained
 instant is kept whole, so retention can only err on the keeping side
 (day-granular, exactly like drop_chunks' chunk-granular contract).
 
-The manifest is rewritten atomically (same temp+rename as append):
-expired snapshots disappear from it (their time travel is gone, as
-after Iceberg expiration), trimmed snapshots get ``min_ts_us`` raised
-to the cutoff and ``retention_trimmed`` set (their ``row_count``
-becomes an upper bound, flagged by ``rows_approximate``).
+``expire`` reads only the manifest — each snapshot's ``max_ts_us``,
+``min_ts_us`` and ``days`` list — and commits through the same
+``Manifest.commit`` as append (temp file + rename, and only then the
+deletes): expired snapshots disappear from it (their time travel is
+gone, as after Iceberg expiration), trimmed snapshots lose the dropped
+days from their ``days`` list, get ``min_ts_us`` raised to the cutoff
+day and ``retention_trimmed`` set (their ``row_count`` becomes an
+upper bound, flagged by ``rows_approximate``). The expired directories
+are deleted after the commit, so a crash leaves either the old table
+or the new one; the next commit or ``expire`` deletes what it left
+unreferenced (``Manifest.vacuum``).
 
 A ``RetentionPolicy`` maps tier names to keep-durations; ``None``
 keeps forever — the typical ladder keeps raw/checked briefly, 1min for
@@ -33,19 +39,9 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import shutil
-import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
-from .tier_table import Snapshot, TierTable
-
-_DAY_US = 86_400_000_000
-
-
-def _cutoff_day(cutoff_us: int) -> dt.date:
-    return dt.datetime.fromtimestamp(
-        cutoff_us / 1e6, tz=dt.timezone.utc
-    ).date()
+from .tier_table import _DAY_US, Snapshot, TierTable
 
 
 def expire(table: TierTable, cutoff_us: int) -> dict:
@@ -53,75 +49,55 @@ def expire(table: TierTable, cutoff_us: int) -> dict:
 
     Returns {"snapshots_dropped": n, "days_dropped": n,
     "snapshots_trimmed": n}. Idempotent: a second call with the same
-    cutoff is a no-op. Readers opened after the rewrite see only
-    retained data; concurrent readers of already-listed files keep
-    working until the files vanish (same caveat as Iceberg expiration).
+    cutoff changes no snapshot; it only vacuums what a crashed call
+    left on disk. Works from the manifest alone: a snapshot's
+    range and its day list say what to drop. The dropped directories
+    are deleted only after the new manifest is committed, so a crash
+    anywhere leaves readers the old state or the new one. Readers
+    opened after the commit see only retained data; concurrent readers
+    of already-listed files keep working until the files vanish (same
+    caveat as Iceberg expiration).
     """
-    snaps = table.snapshots()
-    if not snaps:
-        return {"snapshots_dropped": 0, "days_dropped": 0, "snapshots_trimmed": 0}
-    cut_day = _cutoff_day(cutoff_us)
+    # the cutoff's UTC day, as append() names day directories; ISO
+    # dates order as strings, and the NULL partition
+    # (__HIVE_DEFAULT_PARTITION__) sorts after every date and is kept
+    cut_day = dt.date(1970, 1, 1) + dt.timedelta(days=cutoff_us // _DAY_US)
+    cut_name = f"__day={cut_day.isoformat()}"
     kept: list[Snapshot] = []
-    dropped = trimmed = days_dropped = 0
-    for s in snaps:
+    doomed: list[str] = []
+    dropped = trimmed = 0
+    for s in table.snapshots():
         max_ts = s.properties.get("max_ts_us")
-        min_ts = s.properties.get("min_ts_us")
         if max_ts is not None and int(max_ts) < cutoff_us:
             # whole snapshot below the cutoff: expire it
-            shutil.rmtree(s.data_dir, ignore_errors=True)
+            doomed.append(s.data_dir)
             dropped += 1
             continue
         # straddling day-partitioned snapshot: drop whole old days
-        if (
-            min_ts is not None
-            and int(min_ts) < cutoff_us
-            and os.path.isdir(s.data_dir)
-        ):
-            changed = False
-            for name in sorted(os.listdir(s.data_dir)):
-                if not name.startswith("__day="):
-                    continue
-                day = dt.date.fromisoformat(name.split("=", 1)[1])
-                if day < cut_day:
-                    shutil.rmtree(
-                        os.path.join(s.data_dir, name), ignore_errors=True
-                    )
-                    days_dropped += 1
-                    changed = True
-            if changed:
-                s = Snapshot(
-                    s.snapshot_id,
-                    s.parent_id,
-                    s.data_dir,
-                    s.row_count,
-                    {
-                        **s.properties,
-                        # day-granular: retained rows start at the cut
-                        # day, which may precede cutoff_us itself
-                        "min_ts_us": int(
-                            dt.datetime(
-                                cut_day.year,
-                                cut_day.month,
-                                cut_day.day,
-                                tzinfo=dt.timezone.utc,
-                            ).timestamp()
-                            * 1e6
-                        ),
-                        "retention_trimmed": True,
-                        "rows_approximate": True,
-                    },
-                )
-                trimmed += 1
+        old = [day for day in s.properties["days"] if day < cut_name]
+        if old:
+            doomed += [os.path.join(s.data_dir, day) for day in old]
+            s = replace(
+                s,
+                properties={
+                    **s.properties,
+                    "days": [d for d in s.properties["days"] if d not in old],
+                    # day-granular: retained rows start at the cut
+                    # day, which may precede cutoff_us itself
+                    "min_ts_us": cutoff_us // _DAY_US * _DAY_US,
+                    "retention_trimmed": True,
+                    "rows_approximate": True,
+                },
+            )
+            trimmed += 1
         kept.append(s)
-    if dropped or trimmed:
-        tmp = table._manifest_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            for s in kept:
-                f.write(s.to_json() + "\n")
-        os.replace(tmp, table._manifest_path)
+    if doomed:
+        table.manifest.commit(kept, then_delete=doomed)
+    else:
+        table.manifest.vacuum()  # what an earlier crashed run left
     return {
         "snapshots_dropped": dropped,
-        "days_dropped": days_dropped,
+        "days_dropped": len(doomed) - dropped,
         "snapshots_trimmed": trimmed,
     }
 
@@ -139,20 +115,11 @@ class RetentionPolicy:
         return now_us - int(keep * 1_000_000)
 
 
-def enforce(
-    root: str, policy: RetentionPolicy, now_us: int, partition_days_col="ts"
-) -> dict[str, dict]:
+def enforce(root: str, policy: RetentionPolicy, now_us: int) -> dict[str, dict]:
     """Apply the policy to every configured tier under ``root``."""
     results = {}
-    for tier, keep in policy.keep_seconds.items():
+    for tier in policy.keep_seconds:
         cutoff = policy.cutoff_us(tier, now_us)
-        if cutoff is None:
-            continue
-        table = TierTable(
-            os.path.join(root, tier),
-            partition_days_col=(
-                "chunk_end_us" if tier.endswith("_gorilla") else partition_days_col
-            ),
-        )
-        results[tier] = expire(table, cutoff)
+        if cutoff is not None:
+            results[tier] = expire(TierTable(os.path.join(root, tier)), cutoff)
     return results

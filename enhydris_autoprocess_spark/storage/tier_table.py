@@ -11,22 +11,29 @@ On a cluster with an Iceberg catalog, ``append``/``read`` collapse to
 the same call sites (S2/S6 in SURVEY.md §2.1).
 
 Layout:
-    <root>/data/snap-<n>/part-*.parquet   (one directory per commit)
+    <root>/data/snap-<n>-<id>/__day=<date>/part-*.parquet
+                                          (one directory per commit)
     <root>/manifest.jsonl                 (one JSON line per snapshot)
 
-Commit protocol (``append``): one Spark action writes the data files
-and, through a ``DataFrame.observe`` on the written plan, gathers the
-snapshot's row count and partition-column range; then the manifest
-line is appended via write-temp + atomic rename of the whole manifest.
-Readers list files from the manifest only, so a crashed half-written
-data directory is invisible (Iceberg's snapshot isolation, poor man's
-edition; Delta Lake commits the same way — file stats are gathered
-while the files are written, then one log record is committed).
+Commit protocol (``Manifest.commit``, the one every table writer
+uses — ``append``, ``retention.expire``, ``MinHashIndex`` append and
+compact; ``CheckpointStore`` saves through the same atomic write): data
+files are written first into a fresh directory; then the whole
+manifest is rewritten to a temp file and renamed over the old one;
+only after that rename are superseded directories deleted. A crash
+before the rename leaves an orphan directory no reader sees, a crash
+after it leaves data no manifest references; readers see the old state
+or the new one, and the next commit deletes the leftovers
+(``Manifest.vacuum``; Delta Lake's VACUUM likewise deletes only files
+no committed log entry references). ``append`` gathers row count and
+partition range during its one write (``DataFrame.observe``).
+
+Each snapshot records its read schema and its ``__day=`` directories:
+``read`` neither infers nor lists, and ``expire`` edits the list.
 
 Partitioning: data is written partitioned by ``days(ts)`` when a ts
 column exists (hypertable analog of the reference's TimescaleDB record
-store, tests/test_models.py:64-67) plus an optional bucket column for
-conv_id co-location.
+store, tests/test_models.py:64-67).
 """
 
 from __future__ import annotations
@@ -37,6 +44,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -76,13 +84,72 @@ class Snapshot:
         )
 
 
+def write_atomic(path: str, text: str) -> None:
+    """Replace ``path`` with ``text``: write a temp file, then rename it
+    over ``path`` — readers see the old file or the new one, never a
+    partial one."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+class Manifest:
+    """The snapshot log ``<root>/manifest.jsonl`` of one table."""
+
+    def __init__(self, root: str):
+        self.root = root
+        self.path = os.path.join(root, "manifest.jsonl")
+        os.makedirs(os.path.join(root, "data"), exist_ok=True)
+
+    def snapshots(self) -> list[Snapshot]:
+        if not os.path.exists(self.path):
+            return []
+        with open(self.path) as f:
+            return [Snapshot.from_json(line) for line in f if line.strip()]
+
+    def new_data_dir(self, snapshot_id: int) -> str:
+        """A fresh directory name for a snapshot's data files."""
+        return os.path.join(
+            self.root, "data", f"snap-{snapshot_id}-{uuid.uuid4().hex[:8]}"
+        )
+
+    def commit(self, snapshots: list[Snapshot], then_delete=()) -> None:
+        """Make ``snapshots`` the table's state; only after the rename
+        delete each directory in ``then_delete`` (data no committed
+        snapshot references any more), then ``vacuum``."""
+        write_atomic(self.path, "".join(s.to_json() + "\n" for s in snapshots))
+        for path in then_delete:
+            shutil.rmtree(path, ignore_errors=True)
+        self.vacuum()
+
+    def vacuum(self) -> None:
+        """Delete what a crash left that no committed snapshot
+        references: an orphan write, or deletes that never ran. Only
+        ``snap-<n>`` directories with ``n`` up to the last committed id
+        are candidates (a writer in flight writes id last+1)."""
+        snaps = self.snapshots()
+        last = max((s.snapshot_id for s in snaps), default=0)
+        listed = {os.path.basename(s.data_dir) for s in snaps}
+        data = os.path.join(self.root, "data")
+        doomed = [
+            os.path.join(data, n)
+            for n in os.listdir(data)
+            if n not in listed and int(n.split("-")[1]) <= last
+        ]
+        for s in snaps:
+            if "days" in s.properties:  # a TierTable snapshot's day dirs
+                doomed += [
+                    os.path.join(s.data_dir, n)
+                    for n in os.listdir(s.data_dir)
+                    if n.startswith("__day=") and n not in s.properties["days"]
+                ]
+        for path in doomed:
+            shutil.rmtree(path, ignore_errors=True)
+
+
 class TierTable:
-    def __init__(
-        self,
-        root: str,
-        partition_by: tuple[str, ...] = (),
-        partition_days_col: str | None = None,
-    ):
+    def __init__(self, root: str, partition_days_col: str | None = None):
         """``partition_days_col``: name of a timestamp column — or an
         integer column holding epoch MICROSECONDS (Gorilla blob tiers
         carry ``chunk_end_us``, not a ts) — to partition data
@@ -94,13 +161,8 @@ class TierTable:
         returning.
         """
         self.root = root
-        self.partition_by = tuple(partition_by)
         self.partition_days_col = partition_days_col
-        os.makedirs(os.path.join(root, "data"), exist_ok=True)
-
-    @property
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, "manifest.jsonl")
+        self.manifest = Manifest(root)
 
     def _part_micros(self, df: DataFrame):
         """Epoch-micros expression over the partition column, whatever
@@ -116,10 +178,7 @@ class TierTable:
         return F.unix_micros(col.cast("timestamp"))
 
     def snapshots(self) -> list[Snapshot]:
-        if not os.path.exists(self._manifest_path):
-            return []
-        with open(self._manifest_path) as f:
-            return [Snapshot.from_json(line) for line in f if line.strip()]
+        return self.manifest.snapshots()
 
     def current_snapshot(self) -> Snapshot | None:
         snaps = self.snapshots()
@@ -136,7 +195,7 @@ class TierTable:
         the only action: an ``Observation`` at the top of the written
         plan (the write's result stage, so a retried task cannot count
         twice) gathers the row count and the partition column's
-        min/max. Then the manifest commits (write-temp + rename); a
+        min/max. Then the manifest commits (``Manifest.commit``); a
         crash before that leaves an orphan directory no reader sees.
         An empty write commits nothing: its directory is removed and
         the returned snapshot (``row_count == 0``) is not in the
@@ -152,8 +211,8 @@ class TierTable:
         snaps = self.snapshots()
         sid = (snaps[-1].snapshot_id + 1) if snaps else 1
         parent = snaps[-1].snapshot_id if snaps else None
-        data_dir = os.path.join(self.root, "data", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
-        parts = list(self.partition_by)
+        data_dir = self.manifest.new_data_dir(sid)
+        parts = []
         stats = [F.count(F.lit(1)).alias("rows")]
         if (
             self.partition_days_col is not None
@@ -171,16 +230,15 @@ class TierTable:
                 "__day",
                 F.date_from_unix_date(F.floor(us / F.lit(_DAY_US)).cast("int")),
             )
-            parts.insert(0, "__day")
+            parts = ["__day"]
             # the snapshot's range, which read(min_ts_us=...) uses to
             # skip whole snapshot directories (Iceberg manifest file
             # pruning)
             stats += [F.min(us).alias("min_ts_us"), F.max(us).alias("max_ts_us")]
         observed = Observation()
-        writer = df.observe(observed, *stats).write.mode("errorifexists")
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(data_dir)
+        df.observe(observed, *stats).write.mode("errorifexists").partitionBy(
+            *parts
+        ).parquet(data_dir)
         written = observed.get
         row_count = int(written.pop("rows"))
         # a range only when some partition value is non-NULL
@@ -188,6 +246,13 @@ class TierTable:
         if not row_count:
             shutil.rmtree(data_dir, ignore_errors=True)
             return Snapshot(sid, parent, data_dir, 0)
+        # the read schema and the day directories the write made,
+        # listed with no Spark action: read() then needs neither schema
+        # inference nor a directory walk
+        written["schema"] = df.schema.toDDL()
+        written["days"] = sorted(
+            name for name in os.listdir(data_dir) if name.startswith("__day=")
+        )
         if callable(properties):
             properties = properties(row_count)
         snap = Snapshot(
@@ -197,12 +262,7 @@ class TierTable:
             row_count,
             {"committed_at": time.time(), **written, **(properties or {})},
         )
-        tmp = self._manifest_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            for s in snaps:
-                f.write(s.to_json() + "\n")
-            f.write(snap.to_json() + "\n")
-        os.replace(tmp, self._manifest_path)
+        self.manifest.commit([*snaps, snap])
         return snap
 
     def read(
@@ -237,7 +297,7 @@ class TierTable:
         matches — delta consumers pass ("compaction",) since a
         compaction rewrites already-consumed rows, not new data.
         """
-        dirs: list[tuple[int, str]] = []
+        chosen: list[Snapshot] = []
         for s in self.snapshots():
             if as_of_snapshot is not None and s.snapshot_id > as_of_snapshot:
                 break
@@ -251,21 +311,25 @@ class TierTable:
                 and int(s.properties["max_ts_us"]) < min_ts_us
             ):
                 continue
-            dirs.append((s.snapshot_id, s.data_dir))
-        if not dirs:
+            chosen.append(s)
+        if not chosen:
             return None
         # Each snapshot dir is its own (possibly day-partitioned) table
         # root; a combined multi-path read fails basePath discovery
-        # (CONFLICTING_DIRECTORY_STRUCTURES) — and a reader handle can't
-        # know how an existing table was written. Per-dir scans union
-        # cheaply and filters still push into every scan.
-        from functools import reduce
-
+        # (CONFLICTING_DIRECTORY_STRUCTURES). Per-dir scans union
+        # cheaply and filters still push into every scan. The recorded
+        # schema and day list make each scan a plan with no Spark job.
         parts = []
-        for sid, d in dirs:
-            p = spark.read.option("basePath", d).parquet(d)
+        for s in chosen:
+            d = s.data_dir
+            days = [os.path.join(d, day) for day in s.properties["days"]]
+            p = (
+                spark.read.schema(s.properties["schema"])
+                .option("basePath", d)
+                .parquet(*(days or [d]))
+            )
             if with_snapshot_id:
-                p = p.withColumn("__snap", F.lit(sid))
+                p = p.withColumn("__snap", F.lit(s.snapshot_id))
             parts.append(p)
         df = reduce(lambda a, b: a.unionByName(b), parts)
         if "__day" in df.columns:
@@ -279,9 +343,3 @@ class TierTable:
                 )
             df = df.drop("__day")
         return df
-
-    def read_or_empty(
-        self, spark: SparkSession, schema: str, as_of_snapshot: int | None = None
-    ) -> DataFrame:
-        df = self.read(spark, as_of_snapshot)
-        return df if df is not None else spark.createDataFrame([], schema)

@@ -14,12 +14,14 @@ Design (mirrors the repo's tier-table storage discipline):
     <root>/data/snap-N-xxxx/sig/     parquet (id, sig array<long>)
     <root>/data/snap-N-xxxx/bkt/     parquet (band, bucket, id)
 
-Commit protocol is the same as ``storage/tier_table.py``: data files
-first, manifest last via write-temp + atomic rename, so a crashed
-half-written batch directory is invisible to readers. Snapshot
-isolation is by construction — ``append`` captures the committed
-snapshot paths BEFORE writing its own batch, so the (lazy) returned
-pair frame never sees the batch it just indexed.
+Commit protocol is the same as ``storage/tier_table.py``'s, through its
+``Manifest``: data files first, then ``Manifest.commit`` (write-temp +
+atomic rename), and only then the deletes of superseded directories.
+A crashed half-written batch directory is invisible to readers. One
+manifest covers both stores, so a batch's signatures and buckets
+commit together. Snapshot isolation is by construction — ``append``
+captures the committed snapshot paths BEFORE writing its own batch, so
+the (lazy) returned pair frame never sees the batch it just indexed.
 
 Scale notes (100 TB):
 - signatures are stored ONCE per doc (~0.5 KB at 64 hashes); the
@@ -47,13 +49,12 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..cache import carry_caches
-from ..storage.tier_table import Snapshot
+from ..storage.tier_table import Manifest, Snapshot
 from .dedup import lsh_banded, minhash_signature_fast, sig_agreement
 
 
@@ -90,28 +91,16 @@ class MinHashIndex:
         self.seed = seed
         self._sig_ddl = f"id {id_type}, sig array<long>"
         self._bkt_ddl = f"band int, bucket long, id {id_type}"
-        os.makedirs(root, exist_ok=True)
-
-    # -- manifest ----------------------------------------------------
-    @property
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, "manifest.jsonl")
+        self.manifest = Manifest(root)
 
     def snapshots(self) -> list[Snapshot]:
-        if not os.path.exists(self._manifest_path):
-            return []
-        with open(self._manifest_path) as f:
-            return [Snapshot.from_json(line) for line in f if line.strip()]
+        return self.manifest.snapshots()
 
     def _committed(self, snaps: list[Snapshot], sub: str, ddl: str) -> DataFrame:
         dirs = [os.path.join(s.data_dir, sub) for s in snaps]
         if not dirs:
             return self.spark.createDataFrame([], ddl)
         return self.spark.read.schema(ddl).parquet(*dirs)
-
-    def indexed_signatures(self) -> DataFrame:
-        """The committed (id, sig) store (empty frame if no batches)."""
-        return self._committed(self.snapshots(), "sig", self._sig_ddl)
 
     # -- the operator ------------------------------------------------
     def append(
@@ -222,16 +211,14 @@ class MinHashIndex:
 
         # -- commit (data first, manifest last; tier_table protocol) --
         sid = (snaps[-1].snapshot_id + 1) if snaps else 1
-        data_dir = os.path.join(
-            self.root, "data", f"snap-{sid}-{uuid.uuid4().hex[:8]}"
-        )
-        with_sig.write.mode("errorifexists").parquet(
-            os.path.join(data_dir, "sig")
-        )
+        data_dir = self.manifest.new_data_dir(sid)
+        observed = Observation()
+        with_sig.observe(observed, F.count(F.lit(1)).alias("rows")).write.mode(
+            "errorifexists"
+        ).parquet(os.path.join(data_dir, "sig"))
         banded.select("band", "bucket", "id").write.mode(
             "errorifexists"
         ).parquet(os.path.join(data_dir, "bkt"))
-        rows = with_sig.count()
         props = {"committed_at": time.time()}
         if batch_key is not None:
             props["batch_key"] = batch_key
@@ -239,19 +226,14 @@ class MinHashIndex:
             sid,
             snaps[-1].snapshot_id if snaps else None,
             data_dir,
-            rows,
+            int(observed.get["rows"]),
             props,
         )
-        tmp = self._manifest_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            for s in snaps:
-                f.write(s.to_json() + "\n")
-            f.write(snap.to_json() + "\n")
-        os.replace(tmp, self._manifest_path)
+        self.manifest.commit([*snaps, snap])
 
         return carry_caches(pairs, with_sig)
 
-    def compact(self, min_snapshots: int = 2, vacuum: bool = True) -> int:
+    def compact(self, min_snapshots: int = 2) -> int:
         """Rewrite all committed batch snapshots as ONE (same protocol
         as ``incremental.py``'s tier compaction): daily crawl batches
         leave one snapshot directory each, and ``_committed`` reads
@@ -261,17 +243,16 @@ class MinHashIndex:
         one directory, so results are unchanged (pinned by tests).
 
         Returns the number of snapshots compacted (0 = below
-        ``min_snapshots``, nothing done). ``vacuum`` deletes the
-        superseded data directories after the manifest swap (readers
-        holding pre-swap plans should finish first — same caveat as
+        ``min_snapshots``, nothing done). The superseded data
+        directories are deleted after the manifest commit (readers
+        holding pre-commit plans should finish first — same caveat as
         tier compaction)."""
         snaps = self.snapshots()
         if len(snaps) < min_snapshots:
+            self.manifest.vacuum()  # what an earlier crashed run left
             return 0
         sid = snaps[-1].snapshot_id + 1
-        data_dir = os.path.join(
-            self.root, "data", f"snap-{sid}-compact-{uuid.uuid4().hex[:8]}"
-        )
+        data_dir = self.manifest.new_data_dir(sid)
         sig = self._committed(snaps, "sig", self._sig_ddl)
         bkt = self._committed(snaps, "bkt", self._bkt_ddl)
         sig.write.mode("errorifexists").parquet(os.path.join(data_dir, "sig"))
@@ -303,13 +284,5 @@ class MinHashIndex:
                 ],
             },
         )
-        tmp = self._manifest_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(merged.to_json() + "\n")
-        os.replace(tmp, self._manifest_path)
-        if vacuum:
-            import shutil
-
-            for s in snaps:
-                shutil.rmtree(s.data_dir, ignore_errors=True)
+        self.manifest.commit([merged], then_delete=[s.data_dir for s in snaps])
         return len(snaps)

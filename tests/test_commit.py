@@ -1,18 +1,23 @@
 """The tier commit: one Spark action per tier write, HWMs and domain
-counters observed during that write, and crash consistency at the
-manifest commit point."""
+counters observed during that write, crash consistency at the one
+manifest commit point every table writer shares (and the vacuum of what
+a crash leaves), and reads planned from the manifest with no Spark
+job."""
 
 import datetime as dt
 import os
+from functools import reduce
 
 import pytest
 from pyspark.sql import functions as F
 
+from enhydris_autoprocess_spark.cache import release_caches
 from enhydris_autoprocess_spark.pipeline import CHECKED_FLAGS, Pipeline
-from enhydris_autoprocess_spark.storage import TierTable
+from enhydris_autoprocess_spark.storage import CheckpointStore, TierTable, expire
 from enhydris_autoprocess_spark.storage import tier_table
 from enhydris_autoprocess_spark.storage.checkpoint import bucket_col
 from enhydris_autoprocess_spark.synth import generate_transcripts
+from enhydris_autoprocess_spark.textops import MinHashIndex
 
 from .test_pipeline_storage import CFG
 
@@ -194,3 +199,257 @@ def test_crash_in_pipeline_commit_recovers(
     Pipeline(spark, root, CFG).run(transcripts, finalize=True)
     for tier in TIERS:
         assert _tier_rows(spark, root, tier) == uninterrupted[tier], tier
+
+
+# --- one commit protocol, every writer -----------------------------------------
+
+
+def _crash_at_rename(monkeypatch, target: str, after: bool) -> None:
+    """Raise at the package's one rename when it lands on ``target``:
+    before the rename, or right after it (before any delete)."""
+    real_replace = os.replace
+
+    def replace(src, dst):
+        if os.path.abspath(dst) == os.path.abspath(target):
+            if after:
+                real_replace(src, dst)
+            raise RuntimeError("simulated crash at the commit rename")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(tier_table.os, "replace", replace)
+
+
+def _us(day: int, hour: int = 0) -> int:
+    utc = dt.datetime(2024, 1, day, hour, tzinfo=dt.timezone.utc)
+    return int(utc.timestamp() * 1e6)
+
+
+class _TableCase:
+    """A day-partitioned TierTable; readers see (snapshot ids, rows)."""
+
+    schema = "key string, ts timestamp, value double"
+
+    def __init__(self, spark, root):
+        self.spark = spark
+        self.table = TierTable(os.path.join(root, "t"), partition_days_col="ts")
+
+    def append_days(self, days, batch):
+        rows = [("a", dt.datetime(2024, 1, d, 9), float(d)) for d in days]
+        self.table.append(
+            self.spark.createDataFrame(rows, self.schema), properties={"batch": batch}
+        )
+
+    def state(self):
+        df = self.table.read(self.spark)
+        rows = [] if df is None else sorted(tuple(r) for r in df.collect())
+        return [s.snapshot_id for s in self.table.snapshots()], rows
+
+    def target_path(self):
+        return self.table.manifest.path
+
+
+class Append(_TableCase):
+    def setup(self):
+        self.append_days([1, 2], "b1")
+
+    def op(self):
+        # a retried append is guarded by its caller, as Pipeline's HWMs do
+        if all(s.properties["batch"] != "b2" for s in self.table.snapshots()):
+            self.append_days([3], "b2")
+
+
+class ExpireSnapshot(_TableCase):
+    def setup(self):
+        self.append_days([1, 2], "b1")
+        self.append_days([5, 6], "b2")
+
+    def op(self):
+        expire(self.table, _us(4, 12))
+
+
+class ExpireDays(_TableCase):
+    def setup(self):
+        self.append_days([1, 2, 3], "b1")
+
+    def op(self):
+        expire(self.table, _us(2, 12))
+
+
+class _IndexCase:
+    """A MinHashIndex; readers see (snapshot ids, sig rows, bucket rows)."""
+
+    docs = [(str(i), f"document {i} about rivers and stations") for i in range(6)]
+
+    def __init__(self, spark, root):
+        self.spark = spark
+        self.index = MinHashIndex(
+            spark, os.path.join(root, "idx"), num_hashes=8, bands=4
+        )
+
+    def append(self, lo, hi, key):
+        batch = self.spark.createDataFrame(
+            self.docs[lo:hi], "doc_id string, text string"
+        )
+        try:
+            release_caches(self.index.append(batch, batch_key=key))
+        except ValueError as e:  # a retried batch the index already holds
+            assert "already committed" in str(e)
+
+    def state(self):
+        snaps = self.index.snapshots()
+        sig = self.index._committed(snaps, "sig", self.index._sig_ddl)
+        bkt = self.index._committed(snaps, "bkt", self.index._bkt_ddl)
+        return (
+            [s.snapshot_id for s in snaps],
+            sorted((r.id, tuple(r.sig)) for r in sig.collect()),
+            sorted(tuple(r) for r in bkt.collect()),
+        )
+
+    def target_path(self):
+        return self.index.manifest.path
+
+
+class IndexAppend(_IndexCase):
+    def setup(self):
+        self.append(0, 3, "b1")
+
+    def op(self):
+        self.append(3, 6, "b2")
+
+
+class IndexCompact(_IndexCase):
+    def setup(self):
+        self.append(0, 3, "b1")
+        self.append(3, 6, "b2")
+
+    def op(self):
+        self.index.compact()
+
+
+class Checkpoint:
+    """A CheckpointStore; readers (fresh stores) see the stage's HWMs."""
+
+    def __init__(self, spark, root):
+        self.path = os.path.join(root, "ckpt", "checkpoints.json")
+
+    def store(self):
+        return CheckpointStore(self.path, n_buckets=4)
+
+    def setup(self):
+        self.store().advance("checked", {"__hwm_0": 10, "__hwm_1": 30})
+
+    def op(self):
+        self.store().advance("checked", {"__hwm_0": 20, "__hwm_2": 5})
+
+    def state(self):
+        return self.store().hwms("checked")
+
+    def target_path(self):
+        return self.path
+
+
+COMMIT_POINTS = [
+    Append,
+    ExpireSnapshot,
+    ExpireDays,
+    IndexAppend,
+    IndexCompact,
+    Checkpoint,
+]
+
+
+def _data_layout(case) -> list:
+    """The data directories beside the case's manifest, each as its
+    snapshot id (the random part of the name cut) and its entries."""
+    data = os.path.join(os.path.dirname(case.target_path()), "data")
+    if not os.path.isdir(data):  # the checkpoint store has none
+        return []
+    return sorted(
+        (name.rsplit("-", 1)[0], sorted(os.listdir(os.path.join(data, name))))
+        for name in os.listdir(data)
+    )
+
+
+@pytest.mark.parametrize("after", [False, True], ids=["before_rename", "after_rename"])
+@pytest.mark.parametrize("case", COMMIT_POINTS, ids=lambda c: c.__name__)
+def test_crash_at_every_commit_point(spark, tmp_path, monkeypatch, case, after):
+    """Crash each writer at the commit rename: before it, readers see
+    exactly the old state; right after it (before the deletes), exactly
+    the new one. A re-run then converges to the no-crash result, on
+    disk too: what the crash left unreferenced is deleted."""
+    clean = case(spark, str(tmp_path / "clean"))
+    clean.setup()
+    old = clean.state()
+    clean.op()
+    new = clean.state()
+    assert new != old
+
+    c = case(spark, str(tmp_path / "crash"))
+    c.setup()
+    assert c.state() == old
+    with monkeypatch.context() as m:
+        _crash_at_rename(m, c.target_path(), after)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            c.op()
+    assert c.state() == (new if after else old)
+    c.op()
+    assert c.state() == new
+    assert _data_layout(c) == _data_layout(clean)
+
+
+def test_vacuum_spares_a_write_in_flight(spark, tmp_path):
+    """vacuum deletes an unreferenced directory of a committed id but
+    not one of the next id, which a writer may be filling."""
+    c = _TableCase(spark, str(tmp_path))
+    c.append_days([1], "b1")
+    c.append_days([2], "b2")
+    stale = c.table.manifest.new_data_dir(2)
+    in_flight = c.table.manifest.new_data_dir(3)
+    os.makedirs(stale)
+    os.makedirs(in_flight)
+    c.table.manifest.vacuum()
+    assert not os.path.exists(stale)
+    assert os.path.isdir(in_flight)
+    rows = [("a", dt.datetime(2024, 1, d, 9), float(d)) for d in (1, 2)]
+    assert c.state() == ([1, 2], rows)
+
+
+def test_read_plans_without_a_spark_job(spark, tmp_path):
+    """TierTable.read over many snapshots launches no job before its
+    action (the manifest records each snapshot's schema and day
+    directories), and its columns and dtypes equal what Spark's own
+    schema inference over the snapshot directories gives."""
+    t = TierTable(str(tmp_path / "t"), partition_days_col="ts")
+    schema = "key string, ts timestamp, value double, flags array<string>, n int"
+    for d in range(1, 9):
+        t.append(
+            spark.createDataFrame(
+                [("a", dt.datetime(2024, 1, d, 9), float(d), ["X"], d)], schema
+            )
+        )
+    sc = spark.sparkContext
+
+    def jobs_of(group, plan):
+        sc.setJobGroup(group, group)
+        try:
+            df = plan()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    df, jobs = jobs_of("tier-read", lambda: t.read(spark))
+    assert jobs == 0
+    inferred, inferred_jobs = jobs_of(
+        "inferred-read",
+        lambda: reduce(
+            lambda a, b: a.unionByName(b),
+            [
+                spark.read.option("basePath", s.data_dir).parquet(s.data_dir)
+                for s in t.snapshots()
+            ],
+        ).drop("__day"),
+    )
+    assert inferred_jobs > 0  # the counter sees inference jobs
+    assert df.dtypes == inferred.dtypes
+    assert sorted(df.collect()) == sorted(inferred.collect())

@@ -169,3 +169,19 @@ def test_compaction_preserves_results_and_guards(spark, tmp_path):
     assert sorted(keys) == ["b0", "b3", "b9"]
     with pytest.raises(ValueError, match="already committed"):
         comp.append(_docs_df(spark, DOCS[0:3]), batch_key="b3")
+
+
+def test_append_commit_runs_exactly_its_two_writes(spark, tmp_path):
+    """The batch commit is the sig and bkt writes and nothing else: the
+    row count comes from an observation on the sig write, and the
+    returned pair frame stays lazy."""
+    from .test_commit import _executions
+
+    idx = MinHashIndex(spark, str(tmp_path / "idx7"), **PARAMS)
+    _pairs(idx.append(_docs_df(spark, DOCS[0:3])))
+    batch = _docs_df(spark, DOCS[3:6])
+    before = _executions(spark)
+    out = idx.append(batch)
+    assert _executions(spark) - before == 2
+    assert idx.snapshots()[-1].row_count == 3
+    release_caches(out)

@@ -1,7 +1,8 @@
 """No helpers that nothing calls: every top-level function and class of
-the package is referenced somewhere in the repository's Python files
-(outside the frozen ``plans/`` snapshots) — by a name, an attribute or
-an import. Pure AST walk, no Spark."""
+the package, and every non-dunder method of its classes, is referenced
+somewhere in the repository's Python files (outside the frozen
+``plans/`` snapshots) — by a name, an attribute or an import. Pure AST
+walk, no Spark."""
 
 import ast
 from pathlib import Path
@@ -42,3 +43,24 @@ def test_every_top_level_definition_is_referenced():
             ) and node.name not in referenced:
                 unused.append(f"{path.relative_to(ROOT)}:{node.lineno} {node.name}")
     assert not unused, "defined but never referenced:\n" + "\n".join(unused)
+
+
+def test_every_method_is_referenced():
+    referenced = _referenced_names()
+    unused = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for cls in ast.walk(tree):
+            if not isinstance(cls, ast.ClassDef):
+                continue
+            for node in cls.body:
+                if (
+                    isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and not (node.name.startswith("__") and node.name.endswith("__"))
+                    and node.name not in referenced
+                ):
+                    unused.append(
+                        f"{path.relative_to(ROOT)}:{node.lineno} "
+                        f"{cls.name}.{node.name}"
+                    )
+    assert not unused, "methods never referenced:\n" + "\n".join(unused)

@@ -13,24 +13,26 @@ commit, with lineage (source -> target snapshot) and throughput
 metrics recorded on both the snapshot properties and the checkpoint
 run log (north rule).
 
-Commit protocol (``_commit``): one Spark action per stage, the tier's
-partitioned parquet write. Observations at the top of the written plan
-(its result stage, so a retried task cannot count twice) gather the
-manifest's row count and ts range (``TierTable.append``), one max-HWM
-per checkpoint bucket (``CheckpointStore.hwm_metrics``) and the domain
-counters during the write; then the manifest commits atomically, then
-the HWMs advance. An empty slice commits no snapshot. Non-finalizing
-runs add one action per rollup/quantile tier (``_emit_complete``).
+Commit protocol (``_commit``): one Spark action and one commit point
+per stage, the tier's partitioned parquet write and its manifest
+rename. Observations at the top of the written plan (its result stage,
+so a retried task cannot count twice) gather the manifest's row count
+and ts range (``TierTable.append``), one max-HWM per checkpoint bucket
+(``CheckpointStore.hwm_metrics``) and the domain counters during the
+write; then the manifest commits the data together with the stage's
+advanced HWMs (its ``txn`` entry), and only then is the run logged. A
+crash before the rename leaves the old data and HWMs, a crash after it
+the new ones, so a re-run never appends a slice twice. An empty slice
+commits no snapshot. Non-finalizing runs add one action per
+rollup/quantile tier (``_emit_complete``).
 
-Incremental contract (matches the reference's, coarsened): the
-reference reads each series from ``target.end_date + 1min``
-(models.py:61-65), i.e. it assumes per-series event-time-monotone
-ingestion. Here the checkpoint key is the hash-bucket of conv_id
-(per-partition checkpoints at 10^12-turn scale), so the contract is
-monotone ingestion per bucket. When that assumption cannot hold
-(late / out-of-order uploads), use incremental.py's
-SnapshotIncrementalRollup instead: snapshot-range source reads +
-merge-on-read tiers stay exact under arbitrary arrival order.
+Incremental contract (the reference's, coarsened): the reference reads
+each series from ``target.end_date + 1min`` (models.py:61-65), i.e. it
+assumes per-series event-time-monotone ingestion. Here the checkpoint
+key is the hash-bucket of conv_id (per-partition checkpoints at
+10^12-turn scale), so the contract is monotone ingestion per bucket:
+a late row — at or below its bucket's HWM — is ignored by every stage,
+exactly as the reference never reads before the target's end.
 HWM advancement is stage-aware:
 
 - ``checked``: max processed source ts per bucket (raw rows are final
@@ -44,10 +46,7 @@ HWM advancement is stage-aware:
 
 Idempotence: re-running with no new source rows appends nothing
 (mirrors "already-complete target yields empty",
-tests/test_models.py:1021-1028). Kill between append and advance =
-one slice reprocessed; tier rows are keyed by (key, ts) so readers
-dedup naturally (at-least-once, like Celery redelivery in the
-reference).
+tests/test_models.py:1021-1028).
 
 Rollups cascade: each coarse tier (1H, 1D) is rebuilt from the finer
 *stored* tier above its own HWM, never from raw rows — the hierarchical
@@ -142,20 +141,32 @@ class Pipeline:
         self.cfg = cfg
         self.channel = channel
         self.root = root
-        self.ckpt = CheckpointStore(os.path.join(root, "checkpoints.json"), n_buckets)
-        # O2 config-change trigger (models.py:67-70): a changed config
-        # invalidates all HWMs so affected series reprocess fully.
+        # O2 config-change trigger (models.py:67-70): HWMs committed
+        # under another config (or bucket count) are void, so affected
+        # stages reprocess fully.
         import hashlib
 
-        cfg_repr = repr((cfg, channel, gap_fill_enabled, max_gap_slots))
-        self.config_invalidated = self.ckpt.ensure_config(
-            hashlib.sha256(cfg_repr.encode()).hexdigest()[:16]
+        cfg_repr = repr((cfg, channel, gap_fill_enabled, max_gap_slots, n_buckets))
+        self.ckpt = CheckpointStore(
+            root, n_buckets, hashlib.sha256(cfg_repr.encode()).hexdigest()[:16]
         )
+        self.config_invalidated = self.ckpt.ensure_config(self.stages())
         self.tables: dict[str, TierTable] = {}
         self.gap_fill_enabled = gap_fill_enabled
         self.max_gap_slots = max_gap_slots
         self.compress_tiers = compress_tiers
         self.hot_chunk_span_seconds = hot_chunk_span_seconds
+
+    def stages(self) -> list[str]:
+        """The HWM-checkpointed stages a run commits, in run order."""
+        return [
+            "checked",
+            *(f"agg_{a.target_time_step}_{a.method}" for a in self.cfg.aggregations),
+            *(f"quantile_{q.target_time_step}" for q in self.cfg.quantile_rollups),
+            "rollup_1min",
+            "rollup_1H",
+            "rollup_1D",
+        ]
 
     def table(self, name: str) -> TierTable:
         if name not in self.tables:
@@ -187,13 +198,14 @@ class Pipeline:
         lineage: dict,
         metrics: tuple[Column, ...] = (),
     ) -> StageResult:
-        """Commit one stage slice with ONE Spark action, the tier write:
-        an observation on ``out_df`` gathers the per-bucket max of
-        ``hwm_ts`` keyed by ``hwm_key`` (the new HWMs) and the named
-        aggregates ``metrics`` (domain counters, recorded on the
-        snapshot and the run log) during the write, next to
-        ``TierTable.append``'s own row count and ts range. Then the
-        manifest commits, then the HWMs advance."""
+        """Commit one stage slice with ONE Spark action, the tier write,
+        and one commit point, its manifest rename: an observation on
+        ``out_df`` gathers the per-bucket max of ``hwm_ts`` keyed by
+        ``hwm_key`` and the named aggregates ``metrics`` (domain
+        counters, recorded on the snapshot and the run log) during the
+        write, next to ``TierTable.append``'s own row count and ts
+        range. The manifest then commits the data with the advanced
+        HWMs; the run log is written last."""
         observed = Observation()
         out = out_df.observe(
             observed,
@@ -216,12 +228,19 @@ class Pipeline:
                 "rows_per_sec": round(rows / max(elapsed, 1e-9), 1),
             }
 
-        snap = self.table(stage).append(out, properties=properties)
+        snap = self.table(stage).append(
+            out,
+            properties=properties,
+            txn=lambda: self.ckpt.advance(stage, observed.get),
+        )
         snapshot_id = snap.snapshot_id if snap.row_count else None
-        self.ckpt.advance(
-            stage,
-            observed.get,
-            lineage={**lineage, **counters(), "snapshot": snapshot_id},
+        self.ckpt.record_run(
+            {
+                "stage": stage,
+                **lineage,
+                **counters(),
+                "snapshot": snapshot_id,
+            }
         )
         return StageResult(
             stage,
@@ -303,26 +322,36 @@ class Pipeline:
             F.unix_micros(F.col("ts")) + F.lit(cfg.offset_minutes * 60 * MICROS)
         )
         res = self._commit(stage, agg, "key", hwm_ts, t0, {"source": "checked"})
-        if self.compress_tiers and res.rows_out:
-            # Gorilla-compressed copy of the slice just committed
-            # (north-star tier storage): blobs per (key, chunk) with the
-            # flags array riding alongside — lossless round-trip pinned
-            # by tests/test_pipeline_storage.py.
-            from .storage.gorilla import compress_series
-
-            t1 = time.time()
-            sid = res.snapshot_id
-            slice_df = self.table(stage).read(self.spark, after_snapshot=sid - 1)
-            comp = compress_series(slice_df, flags_col="flags")
-            self.table(f"{stage}_gorilla").append(
-                comp,
-                properties={
-                    "source": stage,
-                    "source_snapshot": sid,
-                    "seconds": round(time.time() - t1, 3),
-                },
-            )
+        if self.compress_tiers:
+            self._compress_tier(stage)
         return res
+
+    def _compress_tier(self, stage: str) -> None:
+        """Gorilla-compressed copy of ``stage`` (north-star tier
+        storage): blobs per (key, chunk) with the flags array riding
+        alongside — lossless round-trip pinned by
+        tests/test_pipeline_storage.py. It compresses every ``stage``
+        snapshot above the last one its table committed (its ``txn``),
+        so a run after a crash between the two commits catches up."""
+        from .storage.gorilla import compress_series
+
+        t0 = time.time()
+        gorilla = self.table(f"{stage}_gorilla")
+        done = gorilla.manifest.txn().get("source_snapshot", 0)
+        newest = self.table(stage).current_snapshot()
+        if newest is None or newest.snapshot_id <= done:
+            return
+        fresh = self.table(stage).read(self.spark, after_snapshot=done)
+        gorilla.append(
+            compress_series(fresh, flags_col="flags"),
+            # a function, so the time is taken after the write
+            properties=lambda rows: {
+                "source": stage,
+                "source_snapshot": newest.snapshot_id,
+                "seconds": round(time.time() - t0, 3),
+            },
+            txn={"source_snapshot": newest.snapshot_id},
+        )
 
     def run_quantile_tier(
         self, cfg_index: int = 0, finalize: bool = True
@@ -410,8 +439,7 @@ class Pipeline:
         # A coarse bucket can span finer rows emitted by earlier runs, so
         # each coarse tier consumes the finer tier above its own HWM
         # (finer rows of un-emitted coarse buckets are exactly the rows
-        # above it). Exact-duplicate finer rows from an at-least-once
-        # replay are dropped before summing.
+        # above it).
         for tier_step, source_name in (("1H", "rollup_1min"), ("1D", "rollup_1H")):
             t0 = time.time()
             stage = f"rollup_{tier_step}"
@@ -423,7 +451,6 @@ class Pipeline:
                 results.append(StageResult(stage, 0, time.time() - t0, None))
                 continue
             finer_fresh = self.ckpt.filter_new(finer, stage, key_col="conv_id")
-            finer_fresh = finer_fresh.dropDuplicates(["conv_id", "role", "ts"])
             tier = rollup_tier(finer_fresh, step)
             if not finalize:
                 tier = _emit_complete(tier, finer_fresh, step)

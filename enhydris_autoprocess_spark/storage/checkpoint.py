@@ -9,17 +9,26 @@ HWM is itself a big table, so the checkpoint key here is the
 advances one HWM per (stage, bucket) and records lineage (source
 snapshot -> target snapshot) and throughput metrics alongside.
 
-The store is a small JSON document, saved through the tier tables'
-one atomic write (``tier_table.write_atomic``: temp file + rename), so
-a crash leaves the old HWMs or the new ones. It is broadcast
-into the scan filter as literals via a tiny in-memory DataFrame join,
-so the incremental read becomes
+Each stage's HWMs live in its own tier table: the per-bucket vector
+and the config hash are the table's ``txn`` entry, committed in the
+same manifest rename as the stage's data (``TierTable.append(txn=)``,
+the analog of Delta's ``txn`` action). A crash leaves the old data and
+HWMs or the new data and HWMs, never one without the other, and
+``retention.expire`` carries the entry forward, so the HWMs outlive
+every snapshot. ``checkpoints.json`` holds only the run log, written
+after the commit: losing an entry loses no state.
+
+The HWMs are broadcast into the scan filter as literals via a tiny
+in-memory DataFrame join, so the incremental read becomes
 ``WHERE ts > hwm(bucket)`` — Catalyst pushes the conjunctive ts bound
 (min over buckets) to Parquet as a scan filter, and the exact per-
 bucket cut is applied by the broadcast hash join. Advancing costs no
 Spark action: the per-bucket maxima are observed (``hwm_metrics``)
 during the tier write that commits the slice. Idempotence: re-runs
 read nothing new and append nothing (A4/S2 semantics).
+
+Late rows: a row at or below its bucket's HWM is never read, as the
+reference reads only after ``target.end_date``.
 """
 
 from __future__ import annotations
@@ -27,11 +36,11 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import ts_micros
-from .tier_table import write_atomic
+from .tier_table import Manifest, write_atomic
 
 DEFAULT_BUCKETS = 64
 
@@ -41,28 +50,32 @@ def bucket_col(key: Column, n_buckets: int = DEFAULT_BUCKETS) -> Column:
 
 
 class CheckpointStore:
-    def __init__(self, path: str, n_buckets: int = DEFAULT_BUCKETS):
-        self.path = path
+    """Per-bucket HWMs of the stage tables under ``root`` (stage
+    ``name`` is the table ``<root>/<name>``), valid for the pipeline
+    config hashed as ``config_hash``; and the run log
+    ``<root>/checkpoints.json``."""
+
+    def __init__(
+        self, root: str, n_buckets: int = DEFAULT_BUCKETS, config_hash: str = ""
+    ):
+        self.root = root
         self.n_buckets = n_buckets
-        self._state = self._load()
+        self.config_hash = config_hash
+        self.path = os.path.join(root, "checkpoints.json")
 
-    def _load(self) -> dict:
-        if os.path.exists(self.path):
-            with open(self.path) as f:
-                return json.load(f)
-        return {"n_buckets": self.n_buckets, "stages": {}, "runs": []}
-
-    def _save(self) -> None:
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        write_atomic(self.path, json.dumps(self._state, indent=1))
+    def _txn(self, stage: str) -> dict:
+        return Manifest(os.path.join(self.root, stage)).txn()
 
     # --- HWMs ---------------------------------------------------------
 
     def hwms(self, stage: str) -> dict[int, int]:
-        """bucket -> high-water-mark (epoch micros, inclusive processed)."""
-        return {
-            int(k): int(v) for k, v in self._state["stages"].get(stage, {}).items()
-        }
+        """bucket -> high-water-mark (epoch micros, inclusive processed),
+        as committed with the stage's data; none if the stage was
+        committed under another config."""
+        txn = self._txn(stage)
+        if txn.get("config") != self.config_hash:
+            return {}
+        return {int(b): int(us) for b, us in txn["hwms"].items()}
 
     def global_min_hwm(self, stage: str) -> int | None:
         """Min HWM across buckets, valid as a coarse lower bound only
@@ -124,55 +137,50 @@ class CheckpointStore:
             for b in range(self.n_buckets)
         ]
 
-    def advance(
-        self, stage: str, observed: dict, lineage: dict | None = None
-    ) -> dict:
-        """Raise each bucket's HWM to its maximum in ``observed`` (the
-        values of ``hwm_metrics`` gathered during the commit's write)
-        and persist, recording a run entry with lineage + metrics.
-        Returns the run."""
-        stage_state = self._state["stages"].setdefault(stage, {})
-        advanced = 0
+    def advance(self, stage: str, observed: dict) -> dict:
+        """The stage's ``txn`` for its next commit: its committed HWMs,
+        each raised to the bucket's maximum in ``observed`` (the values
+        of ``hwm_metrics`` gathered during the commit's write), and the
+        config hash. Writes nothing: the tier commit records it."""
+        hwms = self.hwms(stage)
         for b in range(self.n_buckets):
             m = observed.get(f"__hwm_{b}")
             if m is not None:
-                stage_state[str(b)] = max(int(m), int(stage_state.get(str(b), 0)))
-                advanced += 1
-        run = {
-            "stage": stage,
-            "buckets_advanced": advanced,
-            **(lineage or {}),
+                hwms[b] = max(int(m), hwms.get(b, int(m)))
+        return {
+            "config": self.config_hash,
+            "hwms": {str(b): us for b, us in sorted(hwms.items())},
         }
-        self._state["runs"].append(run)
-        self._save()
-        return run
+
+    # --- run log --------------------------------------------------------
+
+    def runs(self) -> list[dict]:
+        if not os.path.exists(self.path):
+            return []
+        with open(self.path) as f:
+            return json.load(f)["runs"]
 
     def record_run(self, info: dict) -> None:
-        self._state["runs"].append(info)
-        self._save()
+        write_atomic(self.path, json.dumps({"runs": [*self.runs(), info]}, indent=1))
 
-    def ensure_config(self, config_hash: str) -> bool:
+    def ensure_config(self, stages) -> bool:
         """Config-change trigger (O2): the reference re-executes an
         auto-process whenever its config is saved (models.py:67-70,
-        tests/test_models.py:63-87). Batch analog: if the pipeline
-        config hash changed, every HWM is reset so the next run
-        reprocesses from the start (checkpoint invalidation). Returns
-        True when an invalidation happened.
+        tests/test_models.py:63-87). Batch analog: a stage whose table
+        records another config hash has no HWMs (``hwms``), so the next
+        run reprocesses it from the start, and its commit records the
+        new hash. Returns True, and logs the event, when any of
+        ``stages`` was committed under another config.
 
         Note: tier TABLES are append-only, so a config change implies
         the operator should also write to a fresh tier root or rely on
         last-snapshot-wins reads; the pipeline surfaces this by
         recording the invalidation in the run log.
         """
-        stored = self._state.get("config_hash")
-        if stored == config_hash:
-            return False
-        invalidated = bool(stored) and bool(self._state["stages"])
-        if invalidated:
-            self._state["runs"].append(
-                {"event": "config_changed", "old": stored, "new": config_hash}
+        recorded = {s: self._txn(s).get("config") for s in stages}
+        stale = [s for s, h in recorded.items() if h not in (None, self.config_hash)]
+        if stale:
+            self.record_run(
+                {"event": "config_changed", "new": self.config_hash, "stages": stale}
             )
-            self._state["stages"] = {}
-        self._state["config_hash"] = config_hash
-        self._save()
-        return invalidated
+        return bool(stale)

@@ -445,7 +445,6 @@ def compress_series(
     value_col: str = "value",
     flags_col: str | None = None,
     chunk: int = CHUNK,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(key, ts, value[, flags]) -> (key, chunk_start_us, chunk_end_us,
     n, blob[, flags]).
@@ -527,10 +526,9 @@ def compress_series(
 
     schema = COMPRESSED_SCHEMA + (", flags array<string>" if with_flags else "")
     in_cols = [key_col, ts_col, value_col] + ([flags_col] if with_flags else [])
-    n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     return (
         df.select(*in_cols)
-        .repartition(n_parts, key_col)
+        .repartition(df.sparkSession.sparkContext.defaultParallelism, key_col)
         .sortWithinPartitions(key_col, ts_col)
         .mapInPandas(enc_stream, schema=schema)
     )

@@ -24,7 +24,10 @@ deletes): expired snapshots disappear from it (their time travel is
 gone, as after Iceberg expiration), trimmed snapshots lose the dropped
 days from their ``days`` list, get ``min_ts_us`` raised to the cutoff
 day and ``retention_trimmed`` set (their ``row_count`` becomes an
-upper bound, flagged by ``rows_approximate``). The expired directories
+upper bound, flagged by ``rows_approximate``). The table entry — the
+last snapshot id and a stage's committed HWMs — is carried forward
+unchanged, so a stage whose every snapshot expired still reads nothing
+twice. The expired directories
 are deleted after the commit, so a crash leaves either the old table
 or the new one; the next commit or ``expire`` deletes what it left
 unreferenced (``Manifest.vacuum``).

@@ -5,7 +5,7 @@ Why not Iceberg itself: the sandbox's PySpark 4.1.2 install bundles no
 Iceberg/Delta runtime jars and has no network (SURVEY.md §7 guiding
 constraint), so this thin interface mirrors the Iceberg semantics the
 engine needs — atomic append, snapshot ids, lineage/metrics snapshot
-properties, time-travel-by-snapshot for resume — over plain Parquet.
+properties, incremental reads by snapshot id — over plain Parquet.
 On a cluster with an Iceberg catalog, ``append``/``read`` collapse to
 ``df.writeTo(name).append()`` / ``spark.read.format("iceberg")`` with
 the same call sites (S2/S6 in SURVEY.md §2.1).
@@ -13,17 +13,24 @@ the same call sites (S2/S6 in SURVEY.md §2.1).
 Layout:
     <root>/data/snap-<n>-<id>/__day=<date>/part-*.parquet
                                           (one directory per commit)
-    <root>/manifest.jsonl                 (one JSON line per snapshot)
+    <root>/manifest.jsonl                 (a table entry line, then one
+                                           JSON line per snapshot)
+
+The table entry carries the last snapshot id ever committed (ids never
+repeat, even after every snapshot expired) and the writer's ``txn``:
+the state a writer commits with its data, such as a pipeline stage's
+per-bucket HWMs (``CheckpointStore``), the analog of Delta's ``txn``
+action. Every commit that does not set a new ``txn`` carries the old
+one forward unchanged, so ``retention.expire`` keeps it.
 
 Commit protocol (``Manifest.commit``, the one every table writer
 uses — ``append``, ``retention.expire``, ``MinHashIndex`` append and
-compact; ``CheckpointStore`` saves through the same atomic write): data
-files are written first into a fresh directory; then the whole
-manifest is rewritten to a temp file and renamed over the old one;
-only after that rename are superseded directories deleted. A crash
-before the rename leaves an orphan directory no reader sees, a crash
-after it leaves data no manifest references; readers see the old state
-or the new one, and the next commit deletes the leftovers
+compact): data files are written first into a fresh directory; then
+the whole manifest is rewritten to a temp file and renamed over the
+old one; only after that rename are superseded directories deleted.
+A crash before the rename leaves an orphan directory no reader sees, a
+crash after it leaves data no manifest references; readers see the old
+state or the new one, and the next commit deletes the leftovers
 (``Manifest.vacuum``; Delta Lake's VACUUM likewise deletes only files
 no committed log entry references). ``append`` gathers row count and
 partition range during its one write (``DataFrame.observe``).
@@ -43,7 +50,7 @@ import os
 import shutil
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from functools import reduce
 from typing import Callable
 
@@ -62,26 +69,7 @@ class Snapshot:
     properties: dict = field(default_factory=dict)
 
     def to_json(self) -> str:
-        return json.dumps(
-            {
-                "snapshot_id": self.snapshot_id,
-                "parent_id": self.parent_id,
-                "data_dir": self.data_dir,
-                "row_count": self.row_count,
-                "properties": self.properties,
-            }
-        )
-
-    @staticmethod
-    def from_json(line: str) -> "Snapshot":
-        d = json.loads(line)
-        return Snapshot(
-            d["snapshot_id"],
-            d.get("parent_id"),
-            d["data_dir"],
-            d["row_count"],
-            d.get("properties", {}),
-        )
+        return json.dumps(asdict(self))
 
 
 def write_atomic(path: str, text: str) -> None:
@@ -94,19 +82,44 @@ def write_atomic(path: str, text: str) -> None:
     os.replace(tmp, path)
 
 
+def _last_id(entry: dict, snaps: list[Snapshot]) -> int:
+    return max([entry.get("last_snapshot_id", 0)] + [s.snapshot_id for s in snaps])
+
+
 class Manifest:
-    """The snapshot log ``<root>/manifest.jsonl`` of one table."""
+    """The snapshot log ``<root>/manifest.jsonl`` of one table, led by
+    its table entry."""
 
     def __init__(self, root: str):
         self.root = root
         self.path = os.path.join(root, "manifest.jsonl")
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
 
+    def _read(self) -> tuple[dict, list[Snapshot]]:
+        """(table entry, snapshots); a manifest written before the
+        table entry existed reads as an empty entry."""
+        entry, snaps = {}, []
+        if os.path.exists(self.path):
+            with open(self.path) as f:
+                for line in f:
+                    if line.strip():
+                        d = json.loads(line)
+                        if "table" in d:
+                            entry = d["table"]
+                        else:
+                            snaps.append(Snapshot(**d))
+        return entry, snaps
+
     def snapshots(self) -> list[Snapshot]:
-        if not os.path.exists(self.path):
-            return []
-        with open(self.path) as f:
-            return [Snapshot.from_json(line) for line in f if line.strip()]
+        return self._read()[1]
+
+    def txn(self) -> dict:
+        """The writer state committed with the data (empty if none)."""
+        return self._read()[0].get("txn", {})
+
+    def next_id(self) -> int:
+        """The id of the next snapshot: above every id ever committed."""
+        return _last_id(*self._read()) + 1
 
     def new_data_dir(self, snapshot_id: int) -> str:
         """A fresh directory name for a snapshot's data files."""
@@ -114,11 +127,23 @@ class Manifest:
             self.root, "data", f"snap-{snapshot_id}-{uuid.uuid4().hex[:8]}"
         )
 
-    def commit(self, snapshots: list[Snapshot], then_delete=()) -> None:
-        """Make ``snapshots`` the table's state; only after the rename
-        delete each directory in ``then_delete`` (data no committed
-        snapshot references any more), then ``vacuum``."""
-        write_atomic(self.path, "".join(s.to_json() + "\n" for s in snapshots))
+    def commit(
+        self, snapshots: list[Snapshot], then_delete=(), txn: dict | None = None
+    ) -> None:
+        """Make ``snapshots`` (and ``txn``, if given; else the committed
+        one) the table's state in one rename; only after it delete each
+        directory in ``then_delete`` (data no committed snapshot
+        references any more), then ``vacuum``."""
+        entry, old = self._read()
+        table = {
+            "last_snapshot_id": _last_id(entry, old + snapshots),
+            "txn": entry.get("txn", {}) if txn is None else txn,
+        }
+        write_atomic(
+            self.path,
+            json.dumps({"table": table}) + "\n"
+            + "".join(s.to_json() + "\n" for s in snapshots),
+        )
         for path in then_delete:
             shutil.rmtree(path, ignore_errors=True)
         self.vacuum()
@@ -128,8 +153,8 @@ class Manifest:
         references: an orphan write, or deletes that never ran. Only
         ``snap-<n>`` directories with ``n`` up to the last committed id
         are candidates (a writer in flight writes id last+1)."""
-        snaps = self.snapshots()
-        last = max((s.snapshot_id for s in snaps), default=0)
+        entry, snaps = self._read()
+        last = _last_id(entry, snaps)
         listed = {os.path.basename(s.data_dir) for s in snaps}
         data = os.path.join(self.root, "data")
         doomed = [
@@ -188,6 +213,7 @@ class TierTable:
         self,
         df: DataFrame,
         properties: dict | Callable[[int], dict] | None = None,
+        txn: dict | Callable[[], dict] | None = None,
     ) -> Snapshot:
         """Atomic append in one Spark action; returns the snapshot.
 
@@ -206,10 +232,12 @@ class TierTable:
         summary properties — or is a function of the row count
         returning them, called between the write and the commit so a
         caller can record what its own observations gathered during
-        the write.
+        the write. ``txn`` (a dict, or a function returning one, called
+        likewise) replaces the table's writer state in the same commit
+        (``Manifest.commit``); None carries the committed one forward.
         """
         snaps = self.snapshots()
-        sid = (snaps[-1].snapshot_id + 1) if snaps else 1
+        sid = self.manifest.next_id()
         parent = snaps[-1].snapshot_id if snaps else None
         data_dir = self.manifest.new_data_dir(sid)
         parts = []
@@ -262,19 +290,16 @@ class TierTable:
             row_count,
             {"committed_at": time.time(), **written, **(properties or {})},
         )
-        self.manifest.commit([*snaps, snap])
+        self.manifest.commit([*snaps, snap], txn=txn() if callable(txn) else txn)
         return snap
 
     def read(
         self,
         spark: SparkSession,
-        as_of_snapshot: int | None = None,
         min_ts_us: int | None = None,
         after_snapshot: int | None = None,
-        with_snapshot_id: bool = False,
-        exclude_kinds: tuple[str, ...] = (),
     ) -> DataFrame | None:
-        """Read the table at (up to) a snapshot; None if empty.
+        """Read the table's committed snapshots; None if empty.
 
         ``min_ts_us``: two-level pruning for incremental consumers —
         whole snapshot DIRECTORIES whose manifest ``max_ts_us`` is below
@@ -284,26 +309,14 @@ class TierTable:
         date(hwm)`` keeps same-day rows; the caller's exact ``ts > hwm``
         filter does the rest).
 
-        ``after_snapshot``: snapshot-incremental read — only data
-        committed by snapshots STRICTLY AFTER the given id (Iceberg's
-        incremental append scan). Arrival-ordered, so consumers see
-        late/out-of-order event-time rows exactly once.
-
-        ``with_snapshot_id``: attach ``__snap`` (the committing
-        snapshot's id) to every row — the version column merge-on-read
-        readers resolve on.
-
-        ``exclude_kinds``: skip snapshots whose ``properties["kind"]``
-        matches — delta consumers pass ("compaction",) since a
-        compaction rewrites already-consumed rows, not new data.
+        ``after_snapshot``: only data committed by snapshots STRICTLY
+        AFTER the given id (Iceberg's incremental append scan) — how
+        the Gorilla copy of a tier picks up the snapshots it has not
+        compressed yet.
         """
         chosen: list[Snapshot] = []
         for s in self.snapshots():
-            if as_of_snapshot is not None and s.snapshot_id > as_of_snapshot:
-                break
             if after_snapshot is not None and s.snapshot_id <= after_snapshot:
-                continue
-            if exclude_kinds and s.properties.get("kind") in exclude_kinds:
                 continue
             if (
                 min_ts_us is not None
@@ -323,14 +336,11 @@ class TierTable:
         for s in chosen:
             d = s.data_dir
             days = [os.path.join(d, day) for day in s.properties["days"]]
-            p = (
+            parts.append(
                 spark.read.schema(s.properties["schema"])
                 .option("basePath", d)
                 .parquet(*(days or [d]))
             )
-            if with_snapshot_id:
-                p = p.withColumn("__snap", F.lit(s.snapshot_id))
-            parts.append(p)
         df = reduce(lambda a, b: a.unionByName(b), parts)
         if "__day" in df.columns:
             if min_ts_us is not None:

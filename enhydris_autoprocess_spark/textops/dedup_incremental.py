@@ -234,8 +234,7 @@ class MinHashIndex:
         return carry_caches(pairs, with_sig)
 
     def compact(self, min_snapshots: int = 2) -> int:
-        """Rewrite all committed batch snapshots as ONE (same protocol
-        as ``incremental.py``'s tier compaction): daily crawl batches
+        """Rewrite all committed batch snapshots as ONE: daily crawl batches
         leave one snapshot directory each, and ``_committed`` reads
         grow a file-listing + small-file tax per batch — at 10^5
         batches the candidate join's scan is dominated by open costs,
@@ -246,7 +245,7 @@ class MinHashIndex:
         ``min_snapshots``, nothing done). The superseded data
         directories are deleted after the manifest commit (readers
         holding pre-commit plans should finish first — same caveat as
-        tier compaction)."""
+        Iceberg snapshot expiration)."""
         snaps = self.snapshots()
         if len(snaps) < min_snapshots:
             self.manifest.vacuum()  # what an earlier crashed run left

@@ -133,14 +133,6 @@ def main(argv=None) -> int:
                    help="emit trailing incomplete rollup buckets")
     p.add_argument("--retention-now-us", type=int, default=None,
                    help="override 'now' for the retention sweep (tests)")
-    p.add_argument(
-        "--mode",
-        choices=("hwm", "snapshot-incremental"),
-        default="hwm",
-        help="hwm: event-time checkpoints (reference semantics, assumes "
-        "monotone ingestion); snapshot-incremental: arrival-ordered "
-        "ingest+merge, correct under late/out-of-order uploads",
-    )
     args = p.parse_args(argv)
 
     with open(args.config) as f:
@@ -153,16 +145,6 @@ def main(argv=None) -> int:
     spark = SparkSession.builder.appName("enhydris-autoprocess-spark").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     transcripts = spark.read.parquet(args.input)
-
-    if args.mode == "snapshot-incremental":
-        from enhydris_autoprocess_spark.incremental import SnapshotIncrementalRollup
-
-        roll = SnapshotIncrementalRollup(spark, args.root)
-        roll.ingest(transcripts)
-        appended = roll.run()
-        for name, n in appended.items():
-            print(f"tier_{name}: rows={n}")
-        return 0
 
     pipe = Pipeline(
         spark,

@@ -1,14 +1,15 @@
 """The tier commit: one Spark action per tier write, HWMs and domain
-counters observed during that write, crash consistency at the one
-manifest commit point every table writer shares (and the vacuum of what
-a crash leaves), and reads planned from the manifest with no Spark
-job."""
+counters observed during that write and committed with its data in the
+table's manifest entry, crash consistency at the one manifest commit
+point every table writer shares (and the vacuum of what a crash
+leaves), and reads planned from the manifest with no Spark job."""
 
 import datetime as dt
 import os
 from functools import reduce
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from enhydris_autoprocess_spark.cache import release_caches
@@ -16,6 +17,8 @@ from enhydris_autoprocess_spark.pipeline import CHECKED_FLAGS, Pipeline
 from enhydris_autoprocess_spark.storage import CheckpointStore, TierTable, expire
 from enhydris_autoprocess_spark.storage import tier_table
 from enhydris_autoprocess_spark.storage.checkpoint import bucket_col
+from enhydris_autoprocess_spark.storage.gorilla import decompress_series
+from enhydris_autoprocess_spark.storage.retention import RetentionPolicy
 from enhydris_autoprocess_spark.synth import generate_transcripts
 from enhydris_autoprocess_spark.textops import MinHashIndex
 
@@ -53,9 +56,9 @@ def test_each_tier_write_is_one_sql_execution(
     deltas = []
     orig = TierTable.append
 
-    def counting_append(self, df, properties=None):
+    def counting_append(self, df, **commit):
         before = _executions(spark)
-        snap = orig(self, df, properties)
+        snap = orig(self, df, **commit)
         deltas.append((os.path.basename(self.root), _executions(spark) - before))
         return snap
 
@@ -105,7 +108,7 @@ def test_observed_hwms_and_flag_counters(spark, transcripts, tmp_path):
     assert want["flagged_RANGE"] > 0 and want["flagged_DATEINSERT"] > 0
     props = TierTable(f"{root}/checked").current_snapshot().properties
     assert {k: props[k] for k in want} == want
-    run = next(r for r in p.ckpt._state["runs"] if r.get("stage") == "checked")
+    run = next(r for r in p.ckpt.runs() if r.get("stage") == "checked")
     assert {k: run[k] for k in want} == want
 
 
@@ -115,93 +118,6 @@ def test_empty_append_commits_nothing(spark, tmp_path):
     assert snap.row_count == 0
     assert t.snapshots() == []
     assert not os.path.exists(snap.data_dir)
-
-
-def _crash_at_commit(monkeypatch, table_name: str) -> None:
-    """Raise in TierTable.append after the data files are written and
-    before the manifest rename, for the table named ``table_name``."""
-    real_replace = os.replace
-
-    def replace(src, dst):
-        if dst.endswith(os.path.join(table_name, "manifest.jsonl")):
-            raise RuntimeError(f"simulated crash before {table_name} commit")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(tier_table.os, "replace", replace)
-
-
-def test_crash_before_manifest_commit_is_invisible(spark, tmp_path, monkeypatch):
-    t = TierTable(str(tmp_path / "t"), partition_days_col="ts")
-    schema = "key string, ts timestamp, value double"
-    d0 = dt.datetime(2024, 1, 1)
-    first = spark.createDataFrame([("a", d0, 1.0)], schema)
-    second = spark.createDataFrame([("a", d0 + dt.timedelta(days=1), 2.0)], schema)
-    t.append(first)
-    before = t.snapshots()
-
-    with monkeypatch.context() as m:
-        _crash_at_commit(m, "t")
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            t.append(second)
-    # the orphan data directory exists, but readers see the old snapshot
-    assert len(os.listdir(os.path.join(t.root, "data"))) == 2
-    assert [s.to_json() for s in TierTable(t.root).snapshots()] == [
-        s.to_json() for s in before
-    ]
-    assert [r.value for r in t.read(spark).collect()] == [1.0]
-
-    t.append(second)
-    assert sorted(r.value for r in t.read(spark).collect()) == [1.0, 2.0]
-
-
-CUT = dt.datetime(2024, 1, 2)
-TIERS = ("checked", "agg_H_sum", "rollup_1min", "rollup_1H", "rollup_1D")
-
-
-def _tier_rows(spark, root: str, tier: str) -> list:
-    """The tier's rows as a sorted multiset (a duplicate would show)."""
-    df = TierTable(f"{root}/{tier}").read(spark)
-    rows = df.select(sorted(df.columns)).collect()
-    return sorted(tuple(str(v) for v in r) for r in rows)
-
-
-@pytest.fixture(scope="module")
-def uninterrupted(spark, transcripts, tmp_path_factory):
-    """Tiers after the first slice (not finalized), then the whole
-    input (finalized), with no crash."""
-    root = str(tmp_path_factory.mktemp("uninterrupted"))
-    Pipeline(spark, root, CFG).run(
-        transcripts.where(F.col("ts") < F.lit(CUT)), finalize=False
-    )
-    Pipeline(spark, root, CFG).run(transcripts, finalize=True)
-    return {tier: _tier_rows(spark, root, tier) for tier in TIERS}
-
-
-@pytest.mark.parametrize("stage", ["agg_H_sum", "rollup_1H"])
-def test_crash_in_pipeline_commit_recovers(
-    spark, transcripts, uninterrupted, tmp_path, monkeypatch, stage
-):
-    """Crash the second run at ``stage``'s manifest commit: readers keep
-    the pre-crash snapshots, and a plain re-run converges to the tiers
-    of the same two runs without the crash — row for row, so the
-    orphaned write left nothing behind."""
-    root = str(tmp_path / "crash")
-    Pipeline(spark, root, CFG).run(
-        transcripts.where(F.col("ts") < F.lit(CUT)), finalize=False
-    )
-    seen = TierTable(f"{root}/{stage}").snapshots()
-    with monkeypatch.context() as m:
-        _crash_at_commit(m, stage)
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            Pipeline(spark, root, CFG).run(transcripts, finalize=True)
-    assert TierTable(f"{root}/{stage}").snapshots() == seen
-
-    Pipeline(spark, root, CFG).run(transcripts, finalize=True)
-    for tier in TIERS:
-        assert _tier_rows(spark, root, tier) == uninterrupted[tier], tier
-
-
-# --- one commit protocol, every writer -----------------------------------------
 
 
 def _crash_at_rename(monkeypatch, target: str, after: bool) -> None:
@@ -217,6 +133,124 @@ def _crash_at_rename(monkeypatch, target: str, after: bool) -> None:
         return real_replace(src, dst)
 
     monkeypatch.setattr(tier_table.os, "replace", replace)
+
+
+def test_crash_before_manifest_commit_is_invisible(spark, tmp_path, monkeypatch):
+    t = TierTable(str(tmp_path / "t"), partition_days_col="ts")
+    schema = "key string, ts timestamp, value double"
+    d0 = dt.datetime(2024, 1, 1)
+    first = spark.createDataFrame([("a", d0, 1.0)], schema)
+    second = spark.createDataFrame([("a", d0 + dt.timedelta(days=1), 2.0)], schema)
+    t.append(first)
+    before = t.snapshots()
+
+    with monkeypatch.context() as m:
+        _crash_at_rename(m, t.manifest.path, after=False)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            t.append(second)
+    # the orphan data directory exists, but readers see the old snapshot
+    assert len(os.listdir(os.path.join(t.root, "data"))) == 2
+    assert [s.to_json() for s in TierTable(t.root).snapshots()] == [
+        s.to_json() for s in before
+    ]
+    assert [r.value for r in t.read(spark).collect()] == [1.0]
+
+    t.append(second)
+    assert sorted(r.value for r in t.read(spark).collect()) == [1.0, 2.0]
+
+
+CUT = dt.datetime(2024, 1, 2)
+TIERS = (
+    "checked",
+    "agg_H_sum",
+    "agg_H_sum_gorilla",
+    "rollup_1min",
+    "rollup_1H",
+    "rollup_1D",
+)
+
+
+def _tier_rows(spark, root: str, tier: str) -> list:
+    """The tier's rows as a sorted multiset (a duplicate would show); a
+    Gorilla tier decoded, so the chunking does not matter."""
+    df = TierTable(f"{root}/{tier}").read(spark)
+    if tier.endswith("_gorilla"):
+        df = decompress_series(df)
+    rows = df.select(sorted(df.columns)).collect()
+    return sorted(tuple(str(v) for v in r) for r in rows)
+
+
+def _run(spark, root: str, df, finalize: bool) -> None:
+    Pipeline(spark, root, CFG, compress_tiers=True).run(df, finalize=finalize)
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, transcripts, tmp_path_factory):
+    """Tiers after the first slice (not finalized), then the whole
+    input (finalized), with no crash."""
+    root = str(tmp_path_factory.mktemp("uninterrupted"))
+    _run(spark, root, transcripts.where(F.col("ts") < F.lit(CUT)), False)
+    _run(spark, root, transcripts, True)
+    return {tier: _tier_rows(spark, root, tier) for tier in TIERS}
+
+
+@pytest.mark.parametrize(
+    "stage,after",
+    [
+        # a crash before the rename keeps the tier's bare id
+        pytest.param(t, a, id=f"{t}-after_rename" if a else t)
+        for t in TIERS
+        for a in (False, True)
+    ],
+)
+def test_crash_in_pipeline_commit_recovers(
+    spark, transcripts, uninterrupted, tmp_path, monkeypatch, stage, after
+):
+    """Crash the second run at ``stage``'s manifest rename, before or
+    right after it: readers see the tier's old snapshots, or those and
+    the new one, and a plain re-run converges to the tiers of the same
+    two runs without the crash — row for row, so no slice is appended
+    twice and none is lost (the Gorilla copy included)."""
+    root = str(tmp_path / "crash")
+    _run(spark, root, transcripts.where(F.col("ts") < F.lit(CUT)), False)
+    seen = TierTable(f"{root}/{stage}").snapshots()
+    with monkeypatch.context() as m:
+        _crash_at_rename(m, f"{root}/{stage}/manifest.jsonl", after)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            _run(spark, root, transcripts, True)
+    now = TierTable(f"{root}/{stage}").snapshots()
+    assert now[: len(seen)] == seen and len(now) == len(seen) + after
+
+    _run(spark, root, transcripts, True)
+    for tier in TIERS:
+        assert _tier_rows(spark, root, tier) == uninterrupted[tier], tier
+
+
+def test_hwms_survive_expiry_of_every_snapshot(spark, transcripts, tmp_path):
+    """A stage's HWMs live in its table entry, which retention carries
+    forward: after a sweep that expires every snapshot of ``checked``
+    and ``rollup_1min``, a re-run on the same cumulative input appends
+    nothing to any tier, and every stage keeps its HWMs."""
+    root = str(tmp_path / "expired")
+    _run(spark, root, transcripts, True)
+    p = Pipeline(spark, root, CFG, compress_tiers=True)
+    hwms = {stage: p.ckpt.hwms(stage) for stage in p.stages()}
+    assert all(hwms.values())
+    last_us = transcripts.agg(F.max(F.unix_micros("ts"))).first()[0]
+    p.apply_retention(
+        RetentionPolicy({"checked": 0, "rollup_1min": 0}), last_us + 2 * 86_400_000_000
+    )
+    assert TierTable(f"{root}/checked").snapshots() == []
+    assert TierTable(f"{root}/rollup_1min").snapshots() == []
+    snaps = {tier: TierTable(f"{root}/{tier}").snapshots() for tier in TIERS}
+
+    _run(spark, root, transcripts, True)
+    assert {tier: TierTable(f"{root}/{tier}").snapshots() for tier in TIERS} == snaps
+    p = Pipeline(spark, root, CFG, compress_tiers=True)
+    assert {stage: p.ckpt.hwms(stage) for stage in p.stages()} == hwms
+
+
+# --- one commit protocol, every writer -----------------------------------------
 
 
 def _us(day: int, hour: int = 0) -> int:
@@ -326,26 +360,39 @@ class IndexCompact(_IndexCase):
         self.index.compact()
 
 
-class Checkpoint:
-    """A CheckpointStore; readers (fresh stores) see the stage's HWMs."""
-
-    def __init__(self, spark, root):
-        self.path = os.path.join(root, "ckpt", "checkpoints.json")
+class Checkpoint(_TableCase):
+    """A stage commit: a slice and its advanced HWMs in one manifest
+    rename. Readers see the snapshots, the rows and the HWMs a fresh
+    CheckpointStore reads; as in Pipeline, a retried slice is cut by
+    the committed HWMs, so it never commits twice."""
 
     def store(self):
-        return CheckpointStore(self.path, n_buckets=4)
+        return CheckpointStore(
+            os.path.dirname(self.table.root), n_buckets=4, config_hash="cfg"
+        )
+
+    def commit(self, rows):
+        store = self.store()
+        df = self.spark.createDataFrame(
+            [(k, dt.datetime(2024, 1, d, 9), float(d)) for k, d in rows],
+            self.schema,
+        )
+        fresh = store.filter_new(df, "t", key_col="key")
+        seen = Observation()
+        self.table.append(
+            fresh.observe(seen, *store.hwm_metrics(F.col("key"), F.col("ts"))),
+            txn=lambda: store.advance("t", seen.get),
+        )
 
     def setup(self):
-        self.store().advance("checked", {"__hwm_0": 10, "__hwm_1": 30})
+        self.commit([("a", 1), ("a", 2), ("b", 4)])
 
     def op(self):
-        self.store().advance("checked", {"__hwm_0": 20, "__hwm_2": 5})
+        # ("a", 2) is at its bucket's HWM: not read again
+        self.commit([("a", 2), ("a", 3), ("c", 1)])
 
     def state(self):
-        return self.store().hwms("checked")
-
-    def target_path(self):
-        return self.path
+        return (*super().state(), self.store().hwms("t"))
 
 
 COMMIT_POINTS = [
@@ -362,8 +409,6 @@ def _data_layout(case) -> list:
     """The data directories beside the case's manifest, each as its
     snapshot id (the random part of the name cut) and its entries."""
     data = os.path.join(os.path.dirname(case.target_path()), "data")
-    if not os.path.isdir(data):  # the checkpoint store has none
-        return []
     return sorted(
         (name.rsplit("-", 1)[0], sorted(os.listdir(os.path.join(data, name))))
         for name in os.listdir(data)

@@ -93,6 +93,35 @@ def test_incremental_equals_oneshot(spark, transcripts, tmp_path):
         assert a == b, f"{stage}: {len(a)} vs {len(b)} rows; diff={list(a ^ b)[:4]}"
 
 
+def test_late_rows_are_ignored(spark, transcripts, tmp_path):
+    """The incremental contract, as the reference's (it reads only
+    after the target's end, models.py:61-65): a row at or below its
+    bucket's HWM is ignored. A slice older than an already committed
+    one — the rows before a cut of the conversations that also have
+    rows after it — leaves every tier as the run without it left it."""
+    cut = dt.datetime(2024, 1, 2, 0, 0)
+    newer = transcripts.where(F.col("ts") >= F.lit(cut))
+    late = transcripts.where(F.col("ts") < F.lit(cut)).join(
+        newer.select("conv_id"), "conv_id", "left_semi"
+    )
+    assert late.count() > 0
+    root = str(tmp_path / "late")
+    Pipeline(spark, root, CFG, compress_tiers=True).run(newer, finalize=True)
+    tiers = ("checked", "agg_H_sum", "agg_H_sum_gorilla", "rollup_1min",
+             "rollup_1H", "rollup_1D")
+    before = {t: _tier_canon(spark, root, t) for t in tiers}
+    snaps = {t: TierTable(f"{root}/{t}").snapshots() for t in tiers}
+
+    results = Pipeline(spark, root, CFG, compress_tiers=True).run(
+        late.unionByName(newer), finalize=True
+    )
+    assert all(r.rows_out == 0 for r in results), [
+        (r.stage, r.rows_out) for r in results
+    ]
+    assert {t: TierTable(f"{root}/{t}").snapshots() for t in tiers} == snaps
+    assert {t: _tier_canon(spark, root, t) for t in tiers} == before
+
+
 def test_rollup_1min_incremental_no_duplicates(spark, transcripts, tmp_path):
     root = str(tmp_path / "dup")
     p = Pipeline(spark, root, CFG, gap_fill_enabled=False)
@@ -408,7 +437,7 @@ def test_retention_day_granular_expiry_compressed_tier(spark, tmp_path):
         for h in (0, 6, 12, 18)
     ]
     series = spark.createDataFrame(rows, "key string, ts timestamp, value double")
-    comp = compress_series(series, chunk=3, num_partitions=1)
+    comp = compress_series(series, chunk=3)
 
     root = str(tmp_path / "cold")
     t = TierTable(

@@ -35,9 +35,13 @@ a late row — at or below its bucket's HWM — is ignored by every stage,
 exactly as the reference never reads before the target's end.
 HWM advancement is stage-aware:
 
-- ``checked``: max processed source ts per bucket (raw rows are final
-  the moment they're checked), observed on the stage's own output turns
-  — gap-fill's inserted grid rows carry a NULL conv_id and are skipped;
+- ``checked``: max processed source ts per bucket, observed on the
+  stage's own output turns — gap-fill's inserted grid rows carry a NULL
+  conv_id and are skipped. A checked row is not final when gap-fill is
+  on: a gap open at the slice's end is filled only once its right
+  anchor arrives, but the row is already committed unfilled (the open
+  slice-cut defect, ROADMAP direction 1: incremental ``checked`` and
+  ``agg_*`` can differ from one-shot there);
 - aggregated/rollup tiers: max EMITTED bucket-end per bucket — a
   trimmed (MISS) or boundary-incomplete bucket stays below the HWM, so
   its source rows are re-read and the bucket recomputed when more data
@@ -63,6 +67,7 @@ group — see operators/rocc.py and gap_fill_auto.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import time
 from dataclasses import dataclass
@@ -74,7 +79,14 @@ from .cache import release_caches
 from .config import PipelineConfig
 from .operators import aggregate, regularize, run_checks
 from .operators.gapfill import gap_fill_auto
-from .rollup import rollup_tier, rollup_transcripts
+from .operators.regularize import mode_for_method
+from .rollup import (
+    bucket_end,
+    quantile_rollup,
+    quantile_rollup_auto,
+    rollup_tier,
+    rollup_transcripts,
+)
 from .schema import transcripts_to_series
 from .storage import CheckpointStore, TierTable
 from .timeutil import MICROS, parse_step
@@ -144,8 +156,6 @@ class Pipeline:
         # O2 config-change trigger (models.py:67-70): HWMs committed
         # under another config (or bucket count) are void, so affected
         # stages reprocess fully.
-        import hashlib
-
         cfg_repr = repr((cfg, channel, gap_fill_enabled, max_gap_slots, n_buckets))
         self.ckpt = CheckpointStore(
             root, n_buckets, hashlib.sha256(cfg_repr.encode()).hexdigest()[:16]
@@ -186,6 +196,18 @@ class Pipeline:
             )
         return self.tables[name]
 
+    def _source_slice(
+        self, source: str, stage: str, key_col: str
+    ) -> DataFrame | None:
+        """The rows of table ``source`` above ``stage``'s per-bucket
+        HWMs (keyed by ``key_col``): a read pruned at their minimum,
+        then ``CheckpointStore.filter_new``. None if nothing is left to
+        read."""
+        src = self.table(source).read(
+            self.spark, min_ts_us=self.ckpt.global_min_hwm(stage)
+        )
+        return None if src is None else self.ckpt.filter_new(src, stage, key_col)
+
     # ------------------------------------------------------------------
 
     def _commit(
@@ -198,14 +220,10 @@ class Pipeline:
         lineage: dict,
         metrics: tuple[Column, ...] = (),
     ) -> StageResult:
-        """Commit one stage slice with ONE Spark action, the tier write,
-        and one commit point, its manifest rename: an observation on
-        ``out_df`` gathers the per-bucket max of ``hwm_ts`` keyed by
+        """Commit one stage slice by the module's commit protocol: the
+        tier write observes the per-bucket max of ``hwm_ts`` keyed by
         ``hwm_key`` and the named aggregates ``metrics`` (domain
-        counters, recorded on the snapshot and the run log) during the
-        write, next to ``TierTable.append``'s own row count and ts
-        range. The manifest then commits the data with the advanced
-        HWMs; the run log is written last."""
+        counters, recorded on the snapshot and the run log)."""
         observed = Observation()
         out = out_df.observe(
             observed,
@@ -301,14 +319,9 @@ class Pipeline:
         t0 = time.time()
         cfg = self.cfg.aggregations[cfg_index]
         stage = f"agg_{cfg.target_time_step}_{cfg.method}"
-        src = self.table("checked").read(
-            self.spark, min_ts_us=self.ckpt.global_min_hwm(stage)
-        )
-        if src is None:
+        fresh = self._source_slice("checked", stage, "key")
+        if fresh is None:
             return StageResult(stage, 0, time.time() - t0, None)
-        fresh = self.ckpt.filter_new(src, stage, key_col="key")
-        from .operators.regularize import mode_for_method
-
         reg = regularize(
             fresh.select("key", "ts", "value", "flags"),
             parse_step(self.cfg.source_time_step),
@@ -373,15 +386,10 @@ class Pipeline:
         t0 = time.time()
         cfg = self.cfg.quantile_rollups[cfg_index]
         stage = f"quantile_{cfg.target_time_step}"
-        src = self.table("checked").read(
-            self.spark, min_ts_us=self.ckpt.global_min_hwm(stage)
-        )
-        if src is None:
+        fresh = self._source_slice("checked", stage, "key")
+        if fresh is None:
             return StageResult(stage, 0, time.time() - t0, None)
-        fresh = self.ckpt.filter_new(src, stage, key_col="key")
         step = parse_step(cfg.target_time_step)
-        from .rollup import bucket_end, quantile_rollup, quantile_rollup_auto
-
         bucketed = fresh.where(
             F.col("value").isNotNull() & ~F.isnan("value")
         ).select("key", bucket_end(F.col("ts"), step).alias("ts"), "value")
@@ -444,13 +452,10 @@ class Pipeline:
             t0 = time.time()
             stage = f"rollup_{tier_step}"
             step = parse_step(tier_step)
-            finer = self.table(source_name).read(
-                self.spark, min_ts_us=self.ckpt.global_min_hwm(stage)
-            )
-            if finer is None:
+            finer_fresh = self._source_slice(source_name, stage, "conv_id")
+            if finer_fresh is None:
                 results.append(StageResult(stage, 0, time.time() - t0, None))
                 continue
-            finer_fresh = self.ckpt.filter_new(finer, stage, key_col="conv_id")
             tier = rollup_tier(finer_fresh, step)
             if not finalize:
                 tier = _emit_complete(tier, finer_fresh, step)

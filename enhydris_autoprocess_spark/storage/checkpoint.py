@@ -86,14 +86,9 @@ class CheckpointStore:
             return min(hwms.values())
         return None
 
-    def filter_new(
-        self,
-        df: DataFrame,
-        stage: str,
-        key_col: str = "conv_id",
-        ts_col: str = "ts",
-    ) -> DataFrame:
-        """Incremental slice: rows strictly after their bucket's HWM.
+    def filter_new(self, df: DataFrame, stage: str, key_col: str) -> DataFrame:
+        """Incremental slice: rows whose ``ts`` is strictly after the
+        HWM of their ``key_col`` bucket.
 
         Mirrors S1's exclusive bound (models.py:61-65: next start is
         end + 1min, i.e. strictly-greater at minute resolution).
@@ -101,26 +96,23 @@ class CheckpointStore:
         hwms = self.hwms(stage)
         if not hwms:
             return df
-        spark = df.sparkSession
-        hwm_df = spark.createDataFrame(
-            [(b, us) for b, us in hwms.items()], "__bucket int, __hwm_us long"
+        hwm_df = df.sparkSession.createDataFrame(
+            list(hwms.items()), "__bucket int, __hwm_us long"
         )
-        global_min = min(hwms.values()) if len(hwms) == self.n_buckets else None
         out = df.withColumn(
             "__bucket", bucket_col(F.col(key_col), self.n_buckets).cast("int")
         )
-        if global_min is not None:
+        if len(hwms) == self.n_buckets:
             # pushable coarse bound (Parquet row-group pruning)
-            out = out.where(ts_micros(F.col(ts_col)) > F.lit(global_min))
-        out = (
+            out = out.where(ts_micros(F.col("ts")) > F.lit(min(hwms.values())))
+        return (
             out.join(F.broadcast(hwm_df), "__bucket", "left")
             .where(
                 F.col("__hwm_us").isNull()
-                | (ts_micros(F.col(ts_col)) > F.col("__hwm_us"))
+                | (ts_micros(F.col("ts")) > F.col("__hwm_us"))
             )
             .drop("__bucket", "__hwm_us")
         )
-        return out
 
     def hwm_metrics(self, key: Column, ts: Column) -> list[Column]:
         """Per-bucket max of ``ts`` (epoch micros) as ``n_buckets``
@@ -172,10 +164,10 @@ class CheckpointStore:
         new hash. Returns True, and logs the event, when any of
         ``stages`` was committed under another config.
 
-        Note: tier TABLES are append-only, so a config change implies
-        the operator should also write to a fresh tier root or rely on
-        last-snapshot-wins reads; the pipeline surfaces this by
-        recording the invalidation in the run log.
+        Note: tier tables are append-only and no read deduplicates,
+        so after a config change a stage appends its reprocessed rows
+        beside the old ones: write to a fresh tier root. The run log
+        records the invalidation.
         """
         recorded = {s: self._txn(s).get("config") for s in stages}
         stale = [s for s, h in recorded.items() if h not in (None, self.config_hash)]

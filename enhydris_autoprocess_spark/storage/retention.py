@@ -17,20 +17,14 @@ Row-level deletes never happen — a day that contains any retained
 instant is kept whole, so retention can only err on the keeping side
 (day-granular, exactly like drop_chunks' chunk-granular contract).
 
-``expire`` reads only the manifest — each snapshot's ``max_ts_us``,
-``min_ts_us`` and ``days`` list — and commits through the same
-``Manifest.commit`` as append (temp file + rename, and only then the
-deletes): expired snapshots disappear from it (their time travel is
-gone, as after Iceberg expiration), trimmed snapshots lose the dropped
-days from their ``days`` list, get ``min_ts_us`` raised to the cutoff
-day and ``retention_trimmed`` set (their ``row_count`` becomes an
-upper bound, flagged by ``rows_approximate``). The table entry — the
+In the manifest, expired snapshots disappear (their time travel is
+gone, as after Iceberg expiration), and trimmed snapshots lose the
+dropped days from their ``days`` list, get ``min_ts_us`` raised to the
+cutoff day and ``retention_trimmed`` set (their ``row_count`` becomes
+an upper bound, flagged by ``rows_approximate``). The table entry — the
 last snapshot id and a stage's committed HWMs — is carried forward
 unchanged, so a stage whose every snapshot expired still reads nothing
-twice. The expired directories
-are deleted after the commit, so a crash leaves either the old table
-or the new one; the next commit or ``expire`` deletes what it left
-unreferenced (``Manifest.vacuum``).
+twice.
 
 A ``RetentionPolicy`` maps tier names to keep-durations; ``None``
 keeps forever — the typical ladder keeps raw/checked briefly, 1min for
@@ -40,11 +34,10 @@ RETENTION engine rather than just a cascade of aggregates.
 
 from __future__ import annotations
 
-import datetime as dt
 import os
 from dataclasses import dataclass, field, replace
 
-from .tier_table import _DAY_US, Snapshot, TierTable
+from .tier_table import _DAY_US, Snapshot, TierTable, day_dir
 
 
 def expire(table: TierTable, cutoff_us: int) -> dict:
@@ -53,19 +46,17 @@ def expire(table: TierTable, cutoff_us: int) -> dict:
     Returns {"snapshots_dropped": n, "days_dropped": n,
     "snapshots_trimmed": n}. Idempotent: a second call with the same
     cutoff changes no snapshot; it only vacuums what a crashed call
-    left on disk. Works from the manifest alone: a snapshot's
-    range and its day list say what to drop. The dropped directories
-    are deleted only after the new manifest is committed, so a crash
-    anywhere leaves readers the old state or the new one. Readers
+    left on disk. Works from the manifest alone: a snapshot's range
+    and its day list say what to drop. It commits through
+    ``Manifest.commit``, which deletes the dropped directories only
+    after the rename, so a crash anywhere leaves readers the old state
+    or the new one, and the next commit deletes what it left. Readers
     opened after the commit see only retained data; concurrent readers
     of already-listed files keep working until the files vanish (same
     caveat as Iceberg expiration).
     """
-    # the cutoff's UTC day, as append() names day directories; ISO
-    # dates order as strings, and the NULL partition
-    # (__HIVE_DEFAULT_PARTITION__) sorts after every date and is kept
-    cut_day = dt.date(1970, 1, 1) + dt.timedelta(days=cutoff_us // _DAY_US)
-    cut_name = f"__day={cut_day.isoformat()}"
+    # drop the days before the cutoff's; NULL_DAY sorts after them all
+    cut_name = day_dir(cutoff_us)
     kept: list[Snapshot] = []
     doomed: list[str] = []
     dropped = trimmed = 0

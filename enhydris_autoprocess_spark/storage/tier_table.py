@@ -36,7 +36,10 @@ no committed log entry references). ``append`` gathers row count and
 partition range during its one write (``DataFrame.observe``).
 
 Each snapshot records its read schema and its ``__day=`` directories:
-``read`` neither infers nor lists, and ``expire`` edits the list.
+a ``read`` is one parquet scan of the directories the manifest names
+(as a Delta Lake reader scans the files its log names), with no schema
+inference; over more than 32 directories, planning it lists them in
+one Spark job. ``expire`` edits the day lists.
 
 Partitioning: data is written partitioned by ``days(ts)`` when a ts
 column exists (hypertable analog of the reference's TimescaleDB record
@@ -45,19 +48,32 @@ store, tests/test_models.py:64-67).
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import shutil
 import time
 import uuid
 from dataclasses import asdict, dataclass, field
-from functools import reduce
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructType
 
 _DAY_US = 86_400_000_000  # one UTC day in epoch-micros
+
+# rows with a NULL partition value: sorts after every day_dir, so
+# retention.expire keeps it; a read pruned by min_ts_us skips it
+NULL_DAY = "__day=__HIVE_DEFAULT_PARTITION__"
+
+
+def day_dir(us: int) -> str:
+    """The ``__day=`` directory ``append`` writes the rows of the UTC
+    day holding epoch-micros ``us`` to. ISO dates order as strings, so
+    comparing names compares days."""
+    day = dt.date(1970, 1, 1) + dt.timedelta(days=us // _DAY_US)
+    return f"__day={day.isoformat()}"
 
 
 @dataclass
@@ -173,6 +189,13 @@ class Manifest:
             shutil.rmtree(path, ignore_errors=True)
 
 
+def _columns(ddl: str) -> list:
+    """A recorded schema's (name, type) pairs, in name order and without
+    nullability: what one scan needs equal across snapshots (a file
+    scan reads every column as nullable)."""
+    return sorted((f.name, f.dataType.simpleString()) for f in StructType.fromDDL(ddl))
+
+
 class TierTable:
     def __init__(self, root: str, partition_days_col: str | None = None):
         """``partition_days_col``: name of a timestamp column — or an
@@ -182,25 +205,12 @@ class TierTable:
         transform (and of the reference's TimescaleDB hypertable
         time-chunking, tests/test_models.py:64-67). The derived
         ``__day`` column lives only in the file layout: ``append`` adds
-        it, ``read`` prunes on it (``min_ts_us``) and drops it before
-        returning.
+        it, and ``read`` picks day directories by name (``min_ts_us``)
+        and never sees it as a column.
         """
         self.root = root
         self.partition_days_col = partition_days_col
         self.manifest = Manifest(root)
-
-    def _part_micros(self, df: DataFrame):
-        """Epoch-micros expression over the partition column, whatever
-        its type (timestamp vs integer-micros)."""
-        from pyspark.sql.types import IntegerType, LongType
-
-        col = F.col(self.partition_days_col)
-        if isinstance(
-            df.schema[self.partition_days_col].dataType,
-            (LongType, IntegerType),
-        ):
-            return col.cast("long")
-        return F.unix_micros(col.cast("timestamp"))
 
     def snapshots(self) -> list[Snapshot]:
         return self.manifest.snapshots()
@@ -240,20 +250,23 @@ class TierTable:
         sid = self.manifest.next_id()
         parent = snaps[-1].snapshot_id if snaps else None
         data_dir = self.manifest.new_data_dir(sid)
+        schema = df.schema.toDDL()  # the read schema: no __day column
         parts = []
         stats = [F.count(F.lit(1)).alias("rows")]
         if (
             self.partition_days_col is not None
             and self.partition_days_col in df.columns
         ):
-            # Timezone-independent day derivation (ADVICE r04):
-            # to_date(timestamp_micros(...)) applies the SESSION
-            # timezone, while retention's cutoff day is computed in
-            # UTC — with a session tz west of UTC a chunk at/after the
-            # cutoff could land in a day directory expire() drops.
-            # floor-divide micros by a UTC day instead, so the file
-            # layout and the UTC cutoff-day comparison always agree.
-            us = self._part_micros(df)
+            # UTC days whatever the session timezone (which to_date
+            # would apply), so the layout agrees with day_dir, against
+            # which expire() and pruned reads compare
+            col = F.col(self.partition_days_col)
+            if isinstance(
+                df.schema[self.partition_days_col].dataType, (LongType, IntegerType)
+            ):
+                us = col.cast("long")  # already epoch micros
+            else:
+                us = F.unix_micros(col.cast("timestamp"))
             df = df.withColumn(
                 "__day",
                 F.date_from_unix_date(F.floor(us / F.lit(_DAY_US)).cast("int")),
@@ -277,7 +290,7 @@ class TierTable:
         # the read schema and the day directories the write made,
         # listed with no Spark action: read() then needs neither schema
         # inference nor a directory walk
-        written["schema"] = df.schema.toDDL()
+        written["schema"] = schema
         written["days"] = sorted(
             name for name in os.listdir(data_dir) if name.startswith("__day=")
         )
@@ -299,14 +312,15 @@ class TierTable:
         min_ts_us: int | None = None,
         after_snapshot: int | None = None,
     ) -> DataFrame | None:
-        """Read the table's committed snapshots; None if empty.
+        """Read the table's committed snapshots as one parquet scan;
+        None if nothing is left to read. Raises ``ValueError`` if two
+        chosen snapshots record different columns (see ``_columns``).
 
-        ``min_ts_us``: two-level pruning for incremental consumers —
-        whole snapshot DIRECTORIES whose manifest ``max_ts_us`` is below
-        the bound are never opened (Iceberg manifest file pruning), and
-        within surviving snapshots, day directories strictly before the
-        bound's day are never listed into the scan (``__day >=
-        date(hwm)`` keeps same-day rows; the caller's exact ``ts > hwm``
+        ``min_ts_us``: two-level pruning for incremental consumers, from
+        the manifest alone — snapshots whose ``max_ts_us`` is below the
+        bound are skipped whole (Iceberg manifest file pruning), and of
+        the rest only the day directories from the bound's UTC day on
+        are scanned (same-day rows stay; the caller's exact ``ts > hwm``
         filter does the rest).
 
         ``after_snapshot``: only data committed by snapshots STRICTLY
@@ -325,31 +339,29 @@ class TierTable:
             ):
                 continue
             chosen.append(s)
-        if not chosen:
-            return None
-        # Each snapshot dir is its own (possibly day-partitioned) table
-        # root; a combined multi-path read fails basePath discovery
-        # (CONFLICTING_DIRECTORY_STRUCTURES). Per-dir scans union
-        # cheaply and filters still push into every scan. The recorded
-        # schema and day list make each scan a plan with no Spark job.
-        parts = []
+        # One scan of the chosen day directories, with the recorded
+        # schema and no basePath: Spark infers no schema and discovers
+        # no __day column. Planning lists the paths: up to 32
+        # (spark.sql.sources.parallelPartitionDiscovery.threshold) with
+        # no Spark job, more in one listing job.
+        paths = []
+        first = None if min_ts_us is None else day_dir(min_ts_us)
         for s in chosen:
-            d = s.data_dir
-            days = [os.path.join(d, day) for day in s.properties["days"]]
-            parts.append(
-                spark.read.schema(s.properties["schema"])
-                .option("basePath", d)
-                .parquet(*(days or [d]))
-            )
-        df = reduce(lambda a, b: a.unionByName(b), parts)
-        if "__day" in df.columns:
-            if min_ts_us is not None:
-                # UTC day, matching append()'s timezone-independent
-                # __day derivation (session-tz to_date would prune the
-                # wrong directories for non-UTC sessions)
-                df = df.where(
-                    F.col("__day")
-                    >= F.date_from_unix_date(F.lit(min_ts_us // _DAY_US).cast("int"))
+            days = s.properties["days"]
+            if not days:  # not day-partitioned: the files lie in data_dir
+                paths.append(s.data_dir)
+                continue
+            if first is not None:
+                days = [d for d in days if first <= d != NULL_DAY]
+            paths += [os.path.join(s.data_dir, d) for d in days]
+        if not paths:
+            return None
+        schema = chosen[0].properties["schema"]
+        for s in chosen[1:]:
+            ddl = s.properties["schema"]
+            if ddl != schema and _columns(ddl) != _columns(schema):
+                raise ValueError(
+                    f"snapshots {chosen[0].snapshot_id} and {s.snapshot_id} "
+                    f"record different columns: {schema!r} vs {ddl!r}"
                 )
-            df = df.drop("__day")
-        return df
+        return spark.read.schema(schema).parquet(*paths)

@@ -58,6 +58,13 @@ from ..storage.tier_table import Manifest, Snapshot
 from .dedup import lsh_banded, minhash_signature_fast, sig_agreement
 
 
+def _batch_keys(s: Snapshot) -> list:
+    """The batch keys snapshot ``s`` committed: its own, then those of
+    the snapshots compacted into it."""
+    own = [s.properties["batch_key"]] if "batch_key" in s.properties else []
+    return own + s.properties.get("batch_keys", [])
+
+
 class MinHashIndex:
     """Append-only LSH dedup index over (id, text) documents.
 
@@ -124,11 +131,7 @@ class MinHashIndex:
         checkpoint should have consumed the previous result).
         """
         snaps = self.snapshots()
-        if batch_key is not None and any(
-            s.properties.get("batch_key") == batch_key
-            or batch_key in s.properties.get("batch_keys", ())
-            for s in snaps
-        ):
+        if batch_key is not None and any(batch_key in _batch_keys(s) for s in snaps):
             raise ValueError(f"batch_key already committed: {batch_key}")
 
         with_sig = docs.select(
@@ -210,7 +213,7 @@ class MinHashIndex:
         )
 
         # -- commit (data first, manifest last; tier_table protocol) --
-        sid = (snaps[-1].snapshot_id + 1) if snaps else 1
+        sid = self.manifest.next_id()
         data_dir = self.manifest.new_data_dir(sid)
         observed = Observation()
         with_sig.observe(observed, F.count(F.lit(1)).alias("rows")).write.mode(
@@ -250,7 +253,7 @@ class MinHashIndex:
         if len(snaps) < min_snapshots:
             self.manifest.vacuum()  # what an earlier crashed run left
             return 0
-        sid = snaps[-1].snapshot_id + 1
+        sid = self.manifest.next_id()
         data_dir = self.manifest.new_data_dir(sid)
         sig = self._committed(snaps, "sig", self._sig_ddl)
         bkt = self._committed(snaps, "bkt", self._bkt_ddl)
@@ -265,22 +268,9 @@ class MinHashIndex:
             {
                 "committed_at": time.time(),
                 "compacted_from": [s.snapshot_id for s in snaps],
-                # keep every batch_key so the idempotence guard keeps
-                # rejecting re-submitted batches after compaction —
-                # including keys already folded into an earlier
-                # compacted snapshot's batch_keys list
-                "batch_keys": [
-                    k
-                    for s in snaps
-                    for k in (
-                        *(
-                            [s.properties["batch_key"]]
-                            if "batch_key" in s.properties
-                            else []
-                        ),
-                        *s.properties.get("batch_keys", ()),
-                    )
-                ],
+                # every batch key, so the idempotence guard keeps
+                # rejecting re-submitted batches after compaction
+                "batch_keys": [k for s in snaps for k in _batch_keys(s)],
             },
         )
         self.manifest.commit([merged], then_delete=[s.data_dir for s in snaps])

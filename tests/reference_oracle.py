@@ -1,12 +1,13 @@
-"""Single-node pandas re-implementation of the reference semantics.
+"""Single-node pandas re-implementation of the reference semantics: a
+test oracle, not part of the package.
 
-This module IS the stand-in for "the reference implementation's output"
-— the reference's math lives in the uninstallable haggregate/rocc
-libraries, so semantics are reconstructed from the reference source
-(/root/reference/enhydris_autoprocess/models.py) and pinned by the
-golden vectors in tests/test_models.py (validated verbatim in
-tests/test_oracle_goldens.py). The Spark operators are then compared
-against this oracle on larger synthetic series.
+It stands in for "the reference implementation's output": the
+reference's math lives in the haggregate/rocc libraries, which are not
+installed here, so the semantics are reconstructed from the reference's
+``enhydris_autoprocess/models.py``. The only check on it is
+tests/test_oracle_goldens.py, which runs it on the reference's golden
+vectors (its tests/test_models.py) verbatim; no test compares the Spark
+operators with it.
 
 Frames here use the reference's own shape: a DataFrame with a tz-aware
 DatetimeIndex and columns (value: float64, flags: str).
@@ -17,7 +18,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from ..timeutil import Step, parse_delta_t_seconds, parse_step
+from enhydris_autoprocess_spark.timeutil import (
+    Step,
+    parse_delta_t_seconds,
+    parse_step,
+)
 
 
 def _append_flag(flags: pd.Series, mask: pd.Series, flag: str) -> pd.Series:

@@ -459,6 +459,31 @@ def test_vacuum_spares_a_write_in_flight(spark, tmp_path):
     assert c.state() == ([1, 2], rows)
 
 
+def _jobs_of(spark, group, plan):
+    """``plan()``'s result and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = plan()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _inferred_read(spark, snaps):
+    """The oracle of ``TierTable.read``: every snapshot directory read
+    with Spark's own schema and partition inference, unioned by name,
+    the inferred ``__day`` column dropped."""
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            spark.read.option("basePath", s.data_dir).parquet(s.data_dir)
+            for s in snaps
+        ],
+    ).drop("__day")
+
+
 def test_read_plans_without_a_spark_job(spark, tmp_path):
     """TierTable.read over many snapshots launches no job before its
     action (the manifest records each snapshot's schema and day
@@ -472,29 +497,58 @@ def test_read_plans_without_a_spark_job(spark, tmp_path):
                 [("a", dt.datetime(2024, 1, d, 9), float(d), ["X"], d)], schema
             )
         )
-    sc = spark.sparkContext
-
-    def jobs_of(group, plan):
-        sc.setJobGroup(group, group)
-        try:
-            df = plan()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return df, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    df, jobs = jobs_of("tier-read", lambda: t.read(spark))
+    df, jobs = _jobs_of(spark, "tier-read", lambda: t.read(spark))
     assert jobs == 0
-    inferred, inferred_jobs = jobs_of(
-        "inferred-read",
-        lambda: reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                spark.read.option("basePath", s.data_dir).parquet(s.data_dir)
-                for s in t.snapshots()
-            ],
-        ).drop("__day"),
+    inferred, inferred_jobs = _jobs_of(
+        spark, "inferred-read", lambda: _inferred_read(spark, t.snapshots())
     )
     assert inferred_jobs > 0  # the counter sees inference jobs
     assert df.dtypes == inferred.dtypes
     assert sorted(df.collect()) == sorted(inferred.collect())
+
+
+@pytest.mark.parametrize("n", [1, 8, 40])
+def test_read_is_one_scan(spark, tmp_path, n):
+    """Whatever the snapshot count, a read plans ONE parquet scan, plain,
+    pruned by ``min_ts_us`` and incremental by ``after_snapshot``, and
+    returns the oracle's rows and dtypes. Snapshot d holds rows on days
+    d and d+1, so the 40-snapshot table has 80 day directories: above
+    32 paths, planning lists them in one Spark job (none below)."""
+    t = TierTable(str(tmp_path / "t"), partition_days_col="ts")
+    day = dt.datetime(2024, 1, 1)
+    schema = "key string, ts timestamp, value double, n int"
+    for d in range(n):
+        t.append(
+            spark.createDataFrame(
+                [
+                    ("a", day + dt.timedelta(days=d, hours=9), float(d), d),
+                    ("b", day + dt.timedelta(days=d + 1, hours=3), None, d),
+                ],
+                schema,
+            )
+        )
+    oracle = _inferred_read(spark, t.snapshots())
+    bound = day + dt.timedelta(days=n // 2)
+    bound_us = int(bound.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
+    after = n // 2  # snapshot ids run 1..n
+    cases = [
+        ("all", {}, oracle),
+        ("pruned", {"min_ts_us": bound_us}, oracle.where(F.col("ts") >= bound)),
+        (
+            "after",
+            {"after_snapshot": after},
+            _inferred_read(
+                spark, [s for s in t.snapshots() if s.snapshot_id > after]
+            ),
+        ),
+    ]
+    for name, kwargs, expected in cases:
+        df, jobs = _jobs_of(
+            spark, f"one-scan-{n}-{name}", lambda: t.read(spark, **kwargs)
+        )
+        if name == "all":
+            assert jobs == (1 if 2 * n > 32 else 0), name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 1, name
+        assert df.dtypes == expected.dtypes, name
+        assert sorted(df.collect()) == sorted(expected.collect()), name

@@ -9,7 +9,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from enhydris_autoprocess_spark.oracle import (
+from .reference_oracle import (
     ref_aggregate,
     ref_curve_interpolation,
     ref_range_check,

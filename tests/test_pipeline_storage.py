@@ -228,8 +228,8 @@ def test_compressed_tier_round_trip_with_flags(spark, transcripts, tmp_path):
 
 def test_day_partitioned_tier_and_pruned_read(spark, tmp_path):
     """days(ts) hidden partitioning: data dirs split by __day, read()
-    prunes whole days via min_ts_us, and the partition column never
-    leaks into the returned schema."""
+    skips whole days via min_ts_us without scanning them, and the
+    partition column never leaks into the returned schema."""
     import glob
     import os
 
@@ -255,8 +255,9 @@ def test_day_partitioned_tier_and_pruned_read(spark, tmp_path):
     hwm_us = int(dt.datetime(2025, 1, 2, 12, 0).timestamp() * 1_000_000)
     pruned = t.read(spark, min_ts_us=hwm_us)
     assert {r.value for r in pruned.collect()} == {2.0, 3.0}
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "__day" in plan  # pruning happens on the partition column
+    # pruning picks day directories: day 1's files are never listed
+    assert pruned.inputFiles()
+    assert not [f for f in pruned.inputFiles() if "/__day=2025-01-01/" in f]
 
     # manifest-level pruning: append a second snapshot entirely in the
     # future; a read above the FIRST snapshot's max_ts never opens its
@@ -269,6 +270,60 @@ def test_day_partitioned_tier_and_pruned_read(spark, tmp_path):
     assert {r.value for r in pruned2.collect()} == {9.0}
     plan2 = pruned2._jdf.queryExecution().executedPlan().toString()
     assert snap.data_dir not in plan2  # snapshot dir skipped via manifest
+
+
+def test_null_partition_rows(spark, tmp_path):
+    """Rows with a NULL ts land in the NULL partition directory: a full
+    read returns them, a min_ts_us read skips them (no NULL is at or
+    above a bound), and expire keeps them (it drops only dated days
+    before the cutoff's)."""
+    from enhydris_autoprocess_spark.storage import expire
+    from enhydris_autoprocess_spark.storage.tier_table import NULL_DAY
+
+    t = TierTable(str(tmp_path / "t"), partition_days_col="ts")
+    snap = t.append(
+        spark.createDataFrame(
+            [
+                ("a", dt.datetime(2025, 1, 1, 10), 1.0),
+                ("a", dt.datetime(2025, 1, 3, 10), 3.0),
+                ("a", None, 9.0),
+            ],
+            "key string, ts timestamp, value double",
+        )
+    )
+    assert snap.properties["days"][-1] == NULL_DAY
+    assert {r.value for r in t.read(spark).collect()} == {1.0, 3.0, 9.0}
+    bound_us = int(dt.datetime(2025, 1, 2, tzinfo=dt.timezone.utc).timestamp() * 1e6)
+    assert {r.value for r in t.read(spark, min_ts_us=bound_us).collect()} == {3.0}
+    assert expire(t, bound_us)["days_dropped"] == 1
+    assert {r.value for r in t.read(spark).collect()} == {3.0, 9.0}
+
+
+def test_read_checks_snapshot_columns(spark, tmp_path):
+    """Snapshots that differ only in NOT NULL read as one table; ones
+    whose columns differ in name or type raise, naming both snapshots,
+    instead of one scan returning NULLs for the missing column."""
+    t = TierTable(str(tmp_path / "nullability"), partition_days_col="ts")
+    t.append(
+        spark.range(2).selectExpr(
+            "timestamp_micros(id * 86400000000) AS ts", "CAST(id AS DOUBLE) AS value"
+        )
+    )
+    t.append(spark.createDataFrame([(None, None)], "ts timestamp, value double"))
+    ddls = [s.properties["schema"] for s in t.snapshots()]
+    assert "NOT NULL" in ddls[0] and "NOT NULL" not in ddls[1]
+    rows = t.read(spark).collect()
+    assert len(rows) == 3 and {r.value for r in rows} == {0.0, 1.0, None}
+
+    q = TierTable(str(tmp_path / "quantiles"), partition_days_col="ts")
+    for col in ("p50", "p95"):
+        q.append(
+            spark.createDataFrame(
+                [(dt.datetime(2025, 1, 1), 1.0)], f"ts timestamp, {col} double"
+            )
+        )
+    with pytest.raises(ValueError, match="snapshots 1 and 2"):
+        q.read(spark)
 
 
 def test_pipeline_tiers_are_day_partitioned(spark, transcripts, tmp_path):

@@ -52,6 +52,15 @@ Idempotence: re-running with no new source rows appends nothing
 (mirrors "already-complete target yields empty",
 tests/test_models.py:1021-1028).
 
+Stream ingestion (``run_stream``): a ``foreachBatch`` query appends
+each micro-batch to the ``initial`` tier (the reference's INITIAL
+series), then runs the DAG over ``initial`` above the HWMs. The append
+commits ``{"stream": <checkpoint location>, "batch_id": id}`` as the
+table's ``txn`` (Delta's idempotent ``foreachBatch`` write), so a batch
+Spark replays after a crash appends nothing again; the run that
+follows finds only what the crash left undone. No watermark and no
+state store: late rows follow the HWM contract above.
+
 Rollups cascade: each coarse tier (1H, 1D) is rebuilt from the finer
 *stored* tier above its own HWM, never from raw rows — the hierarchical
 composition of coarse aggregates from finer ones.
@@ -95,6 +104,27 @@ from .timeutil import MICROS, parse_step
 # check flags counted on every ``checked`` commit (snapshot properties
 # and run log: ``flagged_<FLAG>``)
 CHECKED_FLAGS = ("RANGE", "SUSPECT", "TEMPORAL", "DATEINSERT", "FILLED")
+
+
+def await_or_stop(q, timeout_sec: int) -> None:
+    """``awaitTermination`` that surfaces a timeout (ADVICE r04).
+
+    ``StreamingQuery.awaitTermination(timeout)`` returns False on
+    timeout with the query STILL RUNNING — ignoring it made a hung
+    catch-up run look like success while the live stream kept holding
+    the checkpoint lock. On timeout: stop the query, then raise."""
+    if not q.awaitTermination(timeout_sec):
+        try:
+            q.stop()
+        finally:
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} did not finish within "
+                f"{timeout_sec}s; stopped"
+            )
+    # surface any terminal failure (awaitTermination(timeout) swallows
+    # the exception path when called with a timeout on some versions)
+    if q.exception() is not None:
+        raise q.exception()
 
 
 def _emit_complete(tier: DataFrame, source: DataFrame, step) -> DataFrame:
@@ -477,6 +507,43 @@ class Pipeline:
             results.append(self.run_quantile_tier(i, finalize=finalize))
         results.extend(self.run_rollups(transcripts, finalize=finalize))
         return results
+
+    def run_stream(
+        self, stream: DataFrame, checkpoint_dir: str, timeout_sec: int = 300
+    ) -> None:
+        """Drive the DAG from a transcript ``stream`` (module docstring,
+        stream ingestion): an ``availableNow`` ``foreachBatch`` query,
+        resumable from ``checkpoint_dir``, that raises if it has not
+        finished within ``timeout_sec``. Each micro-batch appends its
+        rows to ``initial`` unless this checkpoint location already
+        committed this batch id or a later one, then runs the DAG with
+        ``finalize=False`` — on a replay too, as a crash can fall
+        between the two. Late rows and config changes behave as in
+        batch runs: a new config reprocesses from ``initial``.
+        ``initial`` expires under a ``RetentionPolicy`` like any tier;
+        expiring rows still above a stage's HWM loses them for it."""
+        initial = self.table("initial")
+
+        def run_batch(rows: DataFrame, batch_id: int) -> None:
+            done = initial.manifest.txn()
+            if done.get("stream") != checkpoint_dir or done["batch_id"] < batch_id:
+                initial.append(
+                    rows, txn={"stream": checkpoint_dir, "batch_id": batch_id}
+                )
+            hwms = [self.ckpt.global_min_hwm(s) for s in ("checked", "rollup_1min")]
+            fresh = initial.read(
+                self.spark, min_ts_us=None if None in hwms else min(hwms)
+            )
+            if fresh is not None:
+                self.run(fresh, finalize=False)
+
+        q = (
+            stream.writeStream.foreachBatch(run_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_or_stop(q, timeout_sec)
 
     def apply_retention(self, policy, now_us: int) -> dict:
         """Enforce a per-tier retention ladder (e.g. checked: days,

@@ -16,7 +16,7 @@ Design:
   the economic path at 10^12 turns. Rates/means are derived at query
   time (tool_call_rate = tool_calls / turn_count). Tier-by-tier
   equality with direct computation is pinned by
-  tests/test_rollup.py.
+  tests/test_rollup_synth.py.
 
 Scale: each tier is one partial+final hash aggregation; grouping-sets
 doubles the shuffled rows but halves the jobs. No UDFs anywhere.

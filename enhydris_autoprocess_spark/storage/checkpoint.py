@@ -15,8 +15,8 @@ same manifest rename as the stage's data (``TierTable.append(txn=)``,
 the analog of Delta's ``txn`` action). A crash leaves the old data and
 HWMs or the new data and HWMs, never one without the other, and
 ``retention.expire`` carries the entry forward, so the HWMs outlive
-every snapshot. ``checkpoints.json`` holds only the run log, written
-after the commit: losing an entry loses no state.
+every snapshot. ``runs.jsonl`` holds only the run log, one JSON line
+appended per entry after the commit: losing an entry loses no state.
 
 The HWMs are broadcast into the scan filter as literals via a tiny
 in-memory DataFrame join, so the incremental read becomes
@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import ts_micros
-from .tier_table import Manifest, write_atomic
+from .tier_table import Manifest
 
 DEFAULT_BUCKETS = 64
 
@@ -53,7 +53,7 @@ class CheckpointStore:
     """Per-bucket HWMs of the stage tables under ``root`` (stage
     ``name`` is the table ``<root>/<name>``), valid for the pipeline
     config hashed as ``config_hash``; and the run log
-    ``<root>/checkpoints.json``."""
+    ``<root>/runs.jsonl``."""
 
     def __init__(
         self, root: str, n_buckets: int = DEFAULT_BUCKETS, config_hash: str = ""
@@ -61,7 +61,7 @@ class CheckpointStore:
         self.root = root
         self.n_buckets = n_buckets
         self.config_hash = config_hash
-        self.path = os.path.join(root, "checkpoints.json")
+        self.path = os.path.join(root, "runs.jsonl")
 
     def _txn(self, stage: str) -> dict:
         return Manifest(os.path.join(self.root, stage)).txn()
@@ -147,13 +147,31 @@ class CheckpointStore:
     # --- run log --------------------------------------------------------
 
     def runs(self) -> list[dict]:
+        """The logged entries in order, skipping a line that does not
+        parse (one a crash cut short)."""
         if not os.path.exists(self.path):
             return []
+        entries = []
         with open(self.path) as f:
-            return json.load(f)["runs"]
+            for line in f:
+                try:
+                    entries.append(json.loads(line))
+                except json.JSONDecodeError:
+                    pass
+        return entries
 
     def record_run(self, info: dict) -> None:
-        write_atomic(self.path, json.dumps({"runs": [*self.runs(), info]}, indent=1))
+        """Append one line, after a newline ending a torn last line:
+        the cost does not grow with the log, and no byte already
+        written is rewritten."""
+        line = json.dumps(info).encode() + b"\n"
+        with open(self.path, "ab+") as f:
+            end = f.seek(0, os.SEEK_END)
+            if end:
+                f.seek(end - 1)
+                if f.read(1) != b"\n":
+                    line = b"\n" + line
+            f.write(line)
 
     def ensure_config(self, stages) -> bool:
         """Config-change trigger (O2): the reference re-executes an

@@ -11,8 +11,7 @@ hash, bounded by the event-time watermark (a key's state is evicted
 once the watermark passes its last-seen time + delay), so state never
 grows with the corpus — only with the duplicate-arrival horizon.
 
-Semantics vs batch ``exact_dedup``, stated the way
-``rollup_stream.py`` states its contract:
+Semantics vs batch ``exact_dedup``:
 
 - within one watermark horizon the stream admits exactly one row per
   content hash (the first to be processed) — same keeper cardinality

@@ -12,11 +12,11 @@ emitted in append mode once the event-time watermark passes its close
 ``sessionize_native``'s groupBy(key, session_window) + min/max/count/
 sum — called on a ``readStream`` frame with ``withWatermark``.
 
-Semantics vs batch, stated like rollup_stream.py does: late events
-beyond the watermark delay are dropped (batch re-opens via HWM
-trim-recompute); sessions still open at the watermark frontier stay
-unemitted until a later batch closes them (availableNow runs therefore
-emit only sessions that closed before `max_event_time - watermark`).
+Semantics vs batch: late events beyond the watermark delay are dropped
+(the batch operator sees every row); sessions still open at the
+watermark frontier stay unemitted until a later batch closes them
+(availableNow runs therefore emit only sessions that closed before
+`max_event_time - watermark`).
 Boundary rule matches ``sessionize_native``: a gap exactly equal to
 the threshold STARTS a new session (half-open windows) — one instant
 off the batch ``sessionize``'s strict->.
@@ -28,7 +28,7 @@ store, no per-row Python anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..operators.session import sessionize_native
 
@@ -55,38 +55,3 @@ def streaming_sessionize(
         value_col,
     )
 
-
-def run_sessionize_available_now(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    schema,
-    gap_seconds: int,
-    key_col: str = "key",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    watermark: str = "30 minutes",
-    max_files_per_trigger: int | None = None,
-    timeout_sec: int = 300,
-) -> None:
-    """Catch-up run over a parquet directory; resumable via the stream
-    checkpoint (state store holds open sessions across restarts)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.option("recursiveFileLookup", "true").parquet(input_dir)
-    sessions = streaming_sessionize(
-        stream, gap_seconds, key_col, ts_col, value_col, watermark
-    )
-    q = (
-        sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    from .rollup_stream import await_or_stop
-
-    await_or_stop(q, timeout_sec)

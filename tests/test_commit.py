@@ -112,6 +112,26 @@ def test_observed_hwms_and_flag_counters(spark, transcripts, tmp_path):
     assert {k: run[k] for k in want} == want
 
 
+def test_run_log_appends_json_lines(tmp_path):
+    """The run log is JSON lines: entries come back in order, a line a
+    crash cut short is skipped, and an append never rewrites a byte
+    already written."""
+    ckpt = CheckpointStore(str(tmp_path))
+    assert ckpt.runs() == []
+    for i in range(3):
+        ckpt.record_run({"stage": "checked", "i": i})
+    assert [r["i"] for r in ckpt.runs()] == [0, 1, 2]
+    with open(ckpt.path, "ab") as f:
+        f.write(b'{"stage": "chec')  # a crash mid-append
+    assert [r["i"] for r in ckpt.runs()] == [0, 1, 2]
+    with open(ckpt.path, "rb") as f:
+        before = f.read()
+    ckpt.record_run({"stage": "checked", "i": 3})
+    with open(ckpt.path, "rb") as f:
+        assert f.read().startswith(before)
+    assert [r["i"] for r in ckpt.runs()] == [0, 1, 2, 3]
+
+
 def test_empty_append_commits_nothing(spark, tmp_path):
     t = TierTable(str(tmp_path / "empty"), partition_days_col="ts")
     snap = t.append(spark.createDataFrame([], "key string, ts timestamp"))

@@ -1,10 +1,8 @@
-"""Streaming rollup (availableNow) vs batch tier; JVM generator shape."""
+"""JVM generator shape; stateful streams (sessionize, gap monitor) vs
+their batch oracles."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from enhydris_autoprocess_spark.rollup import ROLE_ALL, rollup_transcripts
-from enhydris_autoprocess_spark.streaming import run_available_now
 from enhydris_autoprocess_spark.synth import (
     generate_transcripts,
     generate_transcripts_jvm,
@@ -30,49 +28,6 @@ def test_jvm_generator_shape_and_determinism(spark):
     assert 0 < tools < sa[1]
 
 
-def test_streaming_rollup_matches_batch(spark, tmp_path):
-    """availableNow streaming 1min tier == batch tier (per-role rows)
-    once the stream has drained (all windows finalized at stream end)."""
-    t = generate_transcripts(spark, n_convs=15, seed=5)
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
-    t.write.parquet(in_dir)
-
-    run_available_now(
-        spark, in_dir, out_dir, ck_dir, watermark="2 minutes", timeout_sec=240
-    )
-
-    # append mode only finalizes windows once the watermark passes them:
-    # windows ending within `watermark` of the stream's max event time
-    # stay open (the streaming analog of the batch boundary filter /
-    # trim-last). Compare the finalized region on both sides.
-    import datetime as dt
-
-    max_ts = t.agg(F.max("ts")).first()[0]
-    cutoff = max_ts - dt.timedelta(minutes=2)
-    got = spark.read.parquet(out_dir).where(F.col("ts") < F.lit(cutoff))
-    want = (
-        rollup_transcripts(spark.read.parquet(in_dir), "1min")
-        .where(F.col("role") != ROLE_ALL)
-        .where(F.col("ts") < F.lit(cutoff))
-    )
-
-    def canon(df):
-        return {
-            (r.conv_id, r.role, r.ts): (
-                r.turn_count,
-                r.tool_calls,
-                r.text_len_sum,
-                r.text_len_min,
-                r.text_len_max,
-            )
-            for r in df.collect()
-        }
-
-    assert canon(got) == canon(want)
-
-
 def test_streaming_sessionize_cross_batch_merge(spark, tmp_path):
     """VERDICT r03 #7: streaming sessionization via native
     session_window state merging. A session whose fragments arrive in
@@ -84,9 +39,7 @@ def test_streaming_sessionize_cross_batch_merge(spark, tmp_path):
     import time as _time
 
     from enhydris_autoprocess_spark.operators import sessionize_native
-    from enhydris_autoprocess_spark.streaming import (
-        run_sessionize_available_now,
-    )
+    from enhydris_autoprocess_spark.streaming import streaming_sessionize
 
     t0 = dt.datetime(2024, 1, 1, 0, 0)
     rows = []
@@ -116,11 +69,21 @@ def test_streaming_sessionize_cross_batch_merge(spark, tmp_path):
         f = [x for x in os.listdir(f"{in_dir}/{sub}") if x.endswith(".parquet")][0]
         os.utime(os.path.join(in_dir, sub, f), (now - age, now - age))
 
-    run_sessionize_available_now(
-        spark, in_dir, out_dir, ck_dir,
-        schema=df.schema, gap_seconds=600,
-        max_files_per_trigger=1, watermark="10 minutes", timeout_sec=240,
+    stream = (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("recursiveFileLookup", "true")
+        .parquet(in_dir)
     )
+    q = (
+        streaming_sessionize(stream, gap_seconds=600, watermark="10 minutes")
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ck_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(240)
 
     got = {
         (r.key, r.session_start, r.session_end, r.n_events, r.value_sum)
